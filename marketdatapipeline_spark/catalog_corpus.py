@@ -5864,19 +5864,11 @@ def q_corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     so without the pin the tokenize+hash+distinct subplan — the
     expensive part — executes twice."""
     from marketdatapipeline_spark.caching import scoped_persist
-    from marketdatapipeline_spark.textops.dedup import (
-        _shingle_array,
-        md5_int,
-    )
+    from marketdatapipeline_spark.textops.dedup import shingle_hashes
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     sh = scoped_persist(
-        docs.select(
-            "doc_id",
-            F.explode(_shingle_array("text", 3)).alias("shingle"),
-        )
-        .select("doc_id", md5_int(F.col("shingle")).alias("th"))
-        .distinct()
+        shingle_hashes(docs, "doc_id", "text", 3).withColumnRenamed("_h", "th")
     )
     dfc = sh.groupBy("th").agg(F.count("*").alias("df"))
     g = sh.join(dfc, "th").groupBy("doc_id").agg(

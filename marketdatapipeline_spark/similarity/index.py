@@ -59,19 +59,19 @@ def _hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
 
 
 def _hadoop_read_text(spark: SparkSession, path: str) -> str:
+    """Read a small UTF-8 text file through the Hadoop FS API (any
+    scheme) in one py4j round trip: commons-io (shipped with Spark)
+    drains the stream JVM-side and the byte[] crosses as one bytes
+    object, instead of one ``read()`` call per byte."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(conf)
     stream = fs.open(p)
     try:
-        chunks = []
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            chunks.append(b)
-        return bytes(chunks).decode("utf-8")
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode(
+            "utf-8"
+        )
     finally:
         stream.close()
 

@@ -74,6 +74,7 @@ from marketdatapipeline_spark.textops.dedup import (
     minhash_near_duplicates,
     minhash_signature,
     remove_duplicate_spans,
+    shingle_hashes,
     simhash,
     word_shingles,
 )
@@ -125,6 +126,7 @@ __all__ = [
     "minhash_estimate_quality",
     "minhash_near_duplicates",
     "minhash_signature",
+    "shingle_hashes",
     "simhash",
     "word_shingles",
     "adamic_adar",

@@ -740,21 +740,13 @@ def decontaminate(
     ``n_shingles``, ``n_contaminated`` (distinct overlapping
     shingle hashes), ``contamination_frac``, ``contaminated``.
     """
-    from marketdatapipeline_spark.textops.dedup import word_shingles
-
-    def hashed(df: DataFrame) -> DataFrame:
-        return (
-            word_shingles(df, id_col=id_col, text_col=text_col, n=n)
-            .select(F.col(id_col), md5_int(F.col("shingle")).alias("_h"))
-            .distinct()
-        )
-
     from marketdatapipeline_spark.caching import scoped_persist
+    from marketdatapipeline_spark.textops.dedup import shingle_hashes
 
     # two consumers (sizes + hits) — persist the hashed shingle table
     # so the corpus text is scanned and exploded once
-    corpus_sh = scoped_persist(hashed(corpus))
-    bench_sh = hashed(benchmark).select("_h").distinct()
+    corpus_sh = scoped_persist(shingle_hashes(corpus, id_col, text_col, n))
+    bench_sh = shingle_hashes(benchmark, id_col, text_col, n).select("_h").distinct()
     sizes = corpus_sh.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
     hits = (
         corpus_sh.join(F.broadcast(bench_sh), "_h")

@@ -41,40 +41,9 @@ from marketdatapipeline_spark.similarity.index import (
     _hadoop_read_text,
     _hadoop_write_text,
 )
-from marketdatapipeline_spark.textops.dedup import (
-    MERSENNE_P,
-    hash_coeffs,
-    md5_int,
-    word_shingles,
-)
+from marketdatapipeline_spark.textops.dedup import minhash_doc_table
 
 __all__ = ["LSHDedupStore", "build_lsh_store"]
-
-
-def _doc_table(
-    df: DataFrame, num_hashes: int, n: int, id_col: str, text_col: str
-) -> DataFrame:
-    """Fused per-doc build (same shape as minhash_near_duplicates):
-    ONE explode + ONE aggregation emits the MinHash signature, the
-    hashed shingle set, and its size. Docs with < n tokens vanish
-    (no shingles — they cannot near-duplicate anything)."""
-    sh = (
-        word_shingles(df, id_col=id_col, text_col=text_col, n=n)
-        .select(F.col(id_col), md5_int(F.col("shingle")).alias("_h"))
-        # distinct AFTER hashing (the hashed-set Jaccard convention,
-        # mirroring minhash_near_duplicates): word_shingles dedups the
-        # strings, but a 32-bit hash collision between two distinct
-        # shingles would otherwise duplicate a hash in _sh and inflate
-        # n_sh, diverging from the batch pipeline's verdicts
-        .distinct()
-    )
-    h = F.col("_h")
-    aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(hash_coeffs(num_hashes))
-    ]
-    aggs += [F.collect_list("_h").alias("_sh"), F.count("*").alias("n_sh")]
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def _band_key_rows(
@@ -123,7 +92,7 @@ def build_lsh_store(
         n=n,
         id_col=id_col,
     )
-    tab = scoped_persist(_doc_table(docs, num_hashes, n, id_col, text_col))
+    tab = scoped_persist(minhash_doc_table(docs, num_hashes, id_col, text_col, n))
     gens = store._write_generation(tab)
     store._publish({"keys": [gens["keys"]], "sets": [gens["sets"]]})
     _hadoop_write_text(
@@ -333,7 +302,19 @@ class LSHDedupStore:
                 f"store at {self.path} has no commits — build_lsh_store "
                 "publishes commit 0 even for an empty seed"
             )
-        return spark.read.parquet(*dirs)
+        df = spark.read.parquet(*dirs)
+        # r15 switched band keys from decimal strings to xxhash64
+        # bigints; a string key never equi-joins a bigint one, so an
+        # older store would silently read as "zero matches"
+        if sub == "keys":
+            key_type = df.schema["band_key"].dataType.simpleString()
+            if key_type != "bigint":
+                raise ValueError(
+                    f"store at {self.path} has {key_type} band keys (the "
+                    "pre-r15 string format); band keys are now bigint "
+                    "xxhash64 values — rebuild it with build_lsh_store"
+                )
+        return df
 
     # -- public committed-snapshot readers ------------------------------
     # The supported way to inspect store contents: pinned to the latest
@@ -452,7 +433,7 @@ class LSHDedupStore:
         spark = new_docs.sparkSession
         id_col = self.id_col
         tab = scoped_persist(
-            _doc_table(new_docs, self.num_hashes, self.n, id_col, text_col)
+            minhash_doc_table(new_docs, self.num_hashes, id_col, text_col, self.n)
         )
         new_keys = _band_key_rows(tab, self.num_hashes, self.bands, id_col)
         old_keys = self._snapshot(spark, "keys")

@@ -175,14 +175,14 @@ def test_vacuum_removes_orphans_keeps_referenced(spark, store):
     by vacuum; everything the latest commit references survives."""
     import glob
 
-    from marketdatapipeline_spark.textops.incremental import _doc_table
+    from marketdatapipeline_spark.textops.dedup import minhash_doc_table
 
-    ghost = _doc_table(
+    ghost = minhash_doc_table(
         spark.createDataFrame(
             [(999, "orphan generation words never published to any commit")],
             ["doc_id", "text"],
         ),
-        store.num_hashes, store.n, store.id_col, "text",
+        store.num_hashes, store.id_col, "text", store.n,
     )
     store._write_generation(ghost)
     before = {r["doc_id"] for r in store.sets(spark).select("doc_id").collect()}
@@ -330,6 +330,23 @@ def test_legacy_migration_validates_before_moving(spark, store, tmp_path):
     shutil.rmtree(crash, ignore_errors=True)
 
 
+def test_pre_r15_string_band_keys_fail_loudly(spark, store):
+    """A store whose committed keys/ carry string band keys (the r15
+    bigint switch's predecessor) must raise on read, not join to zero
+    candidates and accept every near-duplicate."""
+    _, current = store._latest_commit(spark)
+    gen = "gen-string-keys"
+    store.keys(spark).select(
+        F.col("band_key").cast("string").alias("band_key"), "doc_id"
+    ).write.parquet(os.path.join(store.path, "keys", gen))
+    store._publish({"keys": [gen], "sets": current["sets"]}, spark)
+    batch = spark.createDataFrame([(10, BASE + " extra")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="string band keys"):
+        LSHDedupStore.load(store.path, spark).ingest(batch)
+    with pytest.raises(ValueError, match="build_lsh_store"):
+        store.keys(spark)
+
+
 def test_store_never_holds_text(spark, store):
     for sub in ("keys", "sets"):
         cols = store._snapshot(spark, sub).columns
@@ -341,18 +358,18 @@ def test_uncommitted_generation_is_invisible(spark, store):
     published commit (= a writer that crashed mid-append) must be
     invisible to every reader, and the next successful ingest must
     simply strand them as orphans."""
-    from marketdatapipeline_spark.textops.incremental import _doc_table
+    from marketdatapipeline_spark.textops.dedup import minhash_doc_table
 
     n_before = store._snapshot(spark, "sets").count()
     commit_before, _ = store._latest_commit(spark)
 
     # simulate the crash: generation written, no commit published
-    ghost = _doc_table(
+    ghost = minhash_doc_table(
         spark.createDataFrame(
             [(999, "ghost document words that never commit anywhere")],
             ["doc_id", "text"],
         ),
-        store.num_hashes, store.n, store.id_col, "text",
+        store.num_hashes, store.id_col, "text", store.n,
     )
     store._write_generation(ghost)
 

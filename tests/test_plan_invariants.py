@@ -22,6 +22,8 @@ directions; keyed windows print three.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 SF = "/root/testdata/sf0.001"
 
 #: queries whose optimized plan legitimately keeps a global ordered
@@ -182,3 +184,135 @@ def test_detector_fires_on_global_window_shapes(spark):
     )))
     assert not hits(df.withColumn("r", F.row_number().over(w_key)))
     assert not hits(df.withColumn("s", F.sum("id").over(w_part_only)))
+
+
+# ---------------------------------------------------------------------------
+# no higher-order functions on the shingle path
+# ---------------------------------------------------------------------------
+
+#: every catalog query whose plan shingles document text
+SHINGLE_PATH_QUERIES = [
+    "documents_curation",
+    "dedup_jaccard_pairs",
+    "dedup_minhash_signatures",
+    "dedup_minhash_lsh",
+    "dedup_minhash_lsh_ngram",
+    "corpus_dedup_clusters",
+    "dedup_near_removal",
+    "dedup_containment_pairs",
+    "dedup_minhash_quality",
+    "corpus_ngram_novelty",
+    "corpus_decontaminate",
+]
+
+
+@contextmanager
+def executed_plans(spark):
+    """Collects the JVM ``QueryExecution`` of every action the block
+    runs — including the eager collects and store writes a call makes
+    before it returns — as a ``QueryExecutionListener`` receives them."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    plans: list = []
+
+    class Listener:
+        def onSuccess(self, name, qe, duration_ns):
+            plans.append(qe)
+
+        def onFailure(self, name, qe, exception):
+            plans.append(qe)
+
+        class Java:
+            implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+    listener = Listener()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(listener)
+    try:
+        yield plans
+        # listener events are delivered asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        manager.unregister(listener)
+
+
+def _hofs(spark, plans) -> set[str]:
+    from marketdatapipeline_spark.plan_checks import higher_order_functions
+
+    return {h for qe in plans for h in higher_order_functions(qe, spark)}
+
+
+def test_no_higher_order_functions_on_shingle_path(spark, tmp_path):
+    """Every plan the shingle-path queries and ``LSHDedupStore.ingest``
+    execute is free of interpreted lambdas: the walker visits the
+    executed physical plan of each action, cached fragments included."""
+    import marketdatapipeline_spark.catalog_corpus  # noqa: F401
+    import marketdatapipeline_spark.catalog_operators  # noqa: F401
+    import marketdatapipeline_spark.catalog_pipeline  # noqa: F401
+    from marketdatapipeline_spark.caching import release_caches
+    from marketdatapipeline_spark.catalog import EXTENDED_REGISTRY, REGISTRY
+    from marketdatapipeline_spark.catalog_pipeline import _docs
+    from marketdatapipeline_spark.textops.incremental import build_lsh_store
+
+    specs = {**REGISTRY, **EXTENDED_REGISTRY}
+    offenders: dict[str, set[str]] = {}
+    for name in SHINGLE_PATH_QUERIES:
+        try:
+            with executed_plans(spark) as plans:
+                specs[name].fn(spark, SF).collect()
+            assert plans, name
+            if hofs := _hofs(spark, plans):
+                offenders[name] = hofs
+        finally:
+            release_caches()
+
+    docs = _docs(spark, SF).select("doc_id", "text")
+    store = build_lsh_store(docs.filter("doc_id % 2 = 0"), str(tmp_path / "lsh"))
+    try:
+        with executed_plans(spark) as plans:
+            store.ingest(docs.filter("doc_id % 2 = 1")).collect()
+        assert plans
+        if hofs := _hofs(spark, plans):
+            offenders["LSHDedupStore.ingest"] = hofs
+    finally:
+        release_caches()
+    assert not offenders, offenders
+
+
+def test_hof_walker_fires_on_transform_shingles(spark):
+    """The walker must see the replaced ``transform`` shingle form,
+    also when it sits inside a persisted fragment that the query only
+    reads through an in-memory scan — otherwise the scan above could
+    pass by detector breakage."""
+    from pyspark.sql import functions as F
+
+    from marketdatapipeline_spark.plan_checks import higher_order_functions
+    from marketdatapipeline_spark.textops.dedup import md5_int, shingle_hashes
+
+    docs = spark.createDataFrame(
+        [(0, "one two three four"), (1, "")], "doc_id int, text string"
+    )
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    idx = F.when(
+        F.size(words) >= 3, F.sequence(F.lit(1), F.size(words) - 2)
+    ).otherwise(F.array().cast("array<int>"))
+    old = docs.select(
+        "doc_id",
+        F.explode(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, 3)))
+        ).alias("shingle"),
+    ).select("doc_id", md5_int(F.col("shingle")).alias("_h"))
+    assert any("transform" in h for h in higher_order_functions(old))
+
+    cached = old.persist()
+    try:
+        consumer = cached.groupBy("doc_id").count()
+        consumer.collect()
+        assert higher_order_functions(consumer)
+    finally:
+        cached.unpersist()
+
+    new = shingle_hashes(docs)
+    new.collect()
+    assert higher_order_functions(new) == []

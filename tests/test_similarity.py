@@ -926,3 +926,22 @@ def test_size_hint_underestimate_raises_not_ooms(emb, monkeypatch):
     monkeypatch.setattr(S, "SIZE_HINT_SIDE_CAP", 50)
     ok = S.cosine_pairs_above(emb, threshold=0.99, num_blocks=16)
     ok.collect()  # no hint -> no cap, regardless of panel size
+
+
+def test_hadoop_text_roundtrip_multibyte(spark, tmp_path):
+    """Manifest/commit files round-trip byte-exact through the Hadoop
+    FS helpers: a multi-KB payload whose multi-byte UTF-8 characters
+    straddle every buffer boundary."""
+    from marketdatapipeline_spark.similarity.index import (
+        _hadoop_read_text,
+        _hadoop_write_text,
+    )
+
+    text = "".join(
+        f'{{"gen": "gen-{i:05d}", "note": "naïve café — 日本語 ü 😀"}}\n'
+        for i in range(300)
+    )
+    assert len(text.encode("utf-8")) > 16_384
+    path = str(tmp_path / "commit.json")
+    _hadoop_write_text(spark, path, text)
+    assert _hadoop_read_text(spark, path) == text

@@ -20,7 +20,7 @@ from marketdatapipeline_spark.textops import (
     simhash,
     word_shingles,
 )
-from marketdatapipeline_spark.textops.dedup import MERSENNE_P, hash_coeffs
+from marketdatapipeline_spark.textops.dedup import MERSENNE_P, hash_coeffs, md5_int
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -75,6 +75,57 @@ def test_word_shingles_short_and_empty_docs(spark):
     # and the full LSH pipeline runs over a corpus containing them
     out = minhash_near_duplicates(short, threshold=0.5, num_hashes=4, bands=2)
     assert out.count() == 0
+
+
+def _transform_shingles(df, n):
+    """The replaced ``transform``-over-positions shingle expression,
+    kept here only as the parity reference for ``_shingle_rows``."""
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    idx = F.when(
+        F.size(words) >= n, F.sequence(F.lit(1), F.size(words) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return df.select(
+        "doc_id",
+        F.explode(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
+        ).alias("shingle"),
+    )
+
+
+SHINGLE_EDGE_DOCS = [
+    (0, ""),
+    (1, "   "),
+    (2, " \t\n "),
+    (3, None),
+    (4, "one"),
+    (5, "one two"),
+    (6, "one two three"),
+    (7, "one two three four five"),
+    (8, "\tlead\t\ttabs and\n\nnewlines  between\r\nwords trail\t"),
+    (9, "  leading and trailing spaces  "),
+    (10, "naïve café 日本語 テキスト über straße ünïcödé"),
+    (11, "a a a a a a a"),
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_lambda_free_shingles_match_transform_reference(spark, n):
+    """Same (doc, shingle) multiset as the transform form, repeats
+    included, on every edge shape: empty, whitespace-only and NULL
+    text, fewer than / exactly n tokens, tab/newline runs, leading and
+    trailing whitespace, non-ASCII words."""
+    from marketdatapipeline_spark.textops.dedup import _shingle_rows, shingle_hashes
+
+    docs = spark.createDataFrame(SHINGLE_EDGE_DOCS, "doc_id int, text string")
+    ref = _transform_shingles(docs, n)
+    got = _shingle_rows(docs, "doc_id", "text", n)
+    assert ref.count() > 0
+    assert ref.exceptAll(got).count() == 0
+    assert got.exceptAll(ref).count() == 0
+    ref_h = ref.select("doc_id", md5_int(F.col("shingle")).alias("_h")).distinct()
+    got_h = shingle_hashes(docs, n=n)
+    assert ref_h.exceptAll(got_h).count() == 0
+    assert got_h.exceptAll(ref_h).count() == 0
 
 
 def test_lsh_bands_must_divide_signature(docs):

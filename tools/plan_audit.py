@@ -11,7 +11,11 @@ row-level oracles cannot see:
   FlatMapGroupsInPandas) — the deliberate Arrow-batched kernels only;
 - ``pushed`` — whether the parquet scan carries pushed filters;
 - ``textx``  — whether any exchange carries a raw document text column
-  (must stay 0: shuffling corpus text is the classic scale killer).
+  (must stay 0: shuffling corpus text is the classic scale killer);
+- ``hof``    — higher-order-function expressions (``transform``,
+  ``aggregate``, ``filter`` ...), counted on the structured plan by
+  :func:`marketdatapipeline_spark.plan_checks.higher_order_functions`:
+  lambdas evaluate interpreted, outside whole-stage codegen.
 
 Counting caveats (informational tool, not a gate): queries execute
 first so the adaptive plan finalizes; under AQE the post-execution
@@ -34,6 +38,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def audit(name: str, df) -> dict:
+    from marketdatapipeline_spark.plan_checks import higher_order_functions
+
     # materialize first: with AQE the plan only finalizes (and codegen
     # stages appear as "*(n)") after execution
     df.write.format("noop").mode("overwrite").save()
@@ -66,6 +72,7 @@ def audit(name: str, df) -> dict:
         "pushed": "PushedFilters: [" in plan
         and "PushedFilters: []" not in plan,
         "textx": len(text_exchanges),
+        "hof": len(higher_order_functions(df)),
     }
 
 
@@ -89,20 +96,24 @@ def main() -> int:
             rows.append(audit(name, spec.fn(spark, sf_dir)))
         except Exception as e:  # noqa: BLE001
             print(f"ERROR {name}: {e}")
-    hdr = f"{'query':<36} {'exch':>4} {'bcast':>5} {'wsc':>4} {'py':>3} {'pushed':>6} {'textx':>5}"
+    hdr = (
+        f"{'query':<36} {'exch':>4} {'bcast':>5} {'wsc':>4} {'py':>3} "
+        f"{'pushed':>6} {'textx':>5} {'hof':>3}"
+    )
     print(hdr)
     print("-" * len(hdr))
     bad_text = 0
     for r in rows:
         print(
             f"{r['query']:<36} {r['exch']:>4} {r['bcast']:>5} {r['wsc']:>4} "
-            f"{r['py']:>3} {str(r['pushed']):>6} {r['textx']:>5}"
+            f"{r['py']:>3} {str(r['pushed']):>6} {r['textx']:>5} {r['hof']:>3}"
         )
         bad_text += r["textx"]
     print(
         f"\n{len(rows)} queries; total exchanges "
         f"{sum(r['exch'] for r in rows)}, Python boundaries "
-        f"{sum(r['py'] for r in rows)}, text-carrying exchanges {bad_text}"
+        f"{sum(r['py'] for r in rows)}, text-carrying exchanges {bad_text}, "
+        f"higher-order functions {sum(r['hof'] for r in rows)}"
     )
     return 1 if bad_text else 0
 
