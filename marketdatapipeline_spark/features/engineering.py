@@ -28,23 +28,9 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from marketdatapipeline_spark.features.ewm import (
-    add_technical_ewm_features,
     add_technical_ewm_features_native,
+    drop_block_columns,
 )
-
-
-def _ewm_features(df, impl: str, **kwargs) -> DataFrame:
-    """Dispatch RSI/MACD EWMA implementation.
-
-    ``native`` (default): all-JVM blocked scan — deterministic,
-    Python-free, the scale path. ``pandas``: one applyInPandas pass —
-    the exactness reference (bit-equal to pandas/Polars ewm).
-    """
-    if impl == "native":
-        return add_technical_ewm_features_native(df, **kwargs)
-    if impl == "pandas":
-        return add_technical_ewm_features(df, **kwargs)
-    raise ValueError(f"Unknown ewm_impl: {impl}")
 from marketdatapipeline_spark.features.windows import (
     RollingPlan,
     rolling_mean,
@@ -77,20 +63,17 @@ def compute_technical_features(
     bb_std: float = 2.0,
     symbol_col: str = "symbol",
     order_cols: tuple[str, ...] = ("datetime",),
-    ewm_impl: str = "native",
 ) -> DataFrame:
     """RSI, MACD, Bollinger Bands (reference engineering.py:7-70).
 
     Bollinger is pure rolling mean/std → native windows; RSI/MACD need
-    EWMA → the native blocked scan (default) or an applyInPandas pass
-    (see features/ewm.py).
+    EWMA → the native blocked scan (see features/ewm.py).
     """
     _require(df, ("close",))
     w = _base_window(symbol_col, order_cols)
 
-    out = _ewm_features(
+    out = add_technical_ewm_features_native(
         df,
-        ewm_impl,
         rsi_period=rsi_period,
         macd_fast=macd_fast,
         macd_slow=macd_slow,
@@ -295,7 +278,6 @@ def compute_all_features(
     macd_signal: int = 9,
     bb_period: int = 20,
     bb_std: float = 2.0,
-    ewm_impl: str = "native",
     target_horizon: int | None = None,
     target_type: str = "classification",
     engine: str = "arrow",
@@ -381,15 +363,11 @@ def compute_all_features(
         symbol_col=symbol_col,
         order_cols=order_cols,
     )
-    if ewm_impl == "native":
-        # keep the blocked scan's _blk column so every window below can
-        # order by (_blk, *order) — same results (monotone _blk), one
-        # shared physical sort across the EWMA and rolling stages.
-        df = add_technical_ewm_features_native(df, keep_block_columns=True, **kwargs)
-        window_order = ("_blk", *order_cols)
-    else:
-        df = _ewm_features(df, ewm_impl, **kwargs)
-        window_order = order_cols
+    # keep the blocked scan's _blk column so every window below can
+    # order by (_blk, *order) — same results (monotone _blk), one
+    # shared physical sort across the EWMA and rolling stages.
+    df = add_technical_ewm_features_native(df, keep_block_columns=True, **kwargs)
+    window_order = ("_blk", *order_cols)
 
     # 2) Native window stage, O(n) per column: offsets (lag) and
     #    running prefix sums materialize once per distinct primitive
@@ -433,10 +411,7 @@ def compute_all_features(
         *ret_plan.temp_columns,
         *[c for c in offsets if c.startswith("_")],
     )
-    if ewm_impl == "native":
-        from marketdatapipeline_spark.features.ewm import drop_block_columns
-
-        out = drop_block_columns(out)
+    out = drop_block_columns(out)
     if target_horizon is not None:
         out = out.drop("_lead_close").filter(F.col("target").isNotNull())
     return out

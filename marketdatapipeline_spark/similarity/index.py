@@ -25,7 +25,6 @@ just the driver's local disk.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -35,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from marketdatapipeline_spark.data import storefs
 from marketdatapipeline_spark.session import active_or
 from marketdatapipeline_spark.similarity.search import (
     _pair_dot_col,
@@ -43,37 +43,6 @@ from marketdatapipeline_spark.similarity.search import (
     cosine_to_centroids,
     nearest_centroids,
 )
-
-
-def _hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Write a small text file through the Hadoop FS API (any scheme)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _hadoop_read_text(spark: SparkSession, path: str) -> str:
-    """Read a small UTF-8 text file through the Hadoop FS API (any
-    scheme) in one py4j round trip: commons-io (shipped with Spark)
-    drains the stream JVM-side and the byte[] crosses as one bytes
-    object, instead of one ``read()`` call per byte."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    stream = fs.open(p)
-    try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode(
-            "utf-8"
-        )
-    finally:
-        stream.close()
 
 
 def _kmeans_centroids(
@@ -295,9 +264,7 @@ def build_ivf_index(
         "storage": storage,
         "pq_m": pq_m if storage == "pq" else None,
     }
-    _hadoop_write_text(
-        spark, os.path.join(path, "manifest.json"), json.dumps(manifest)
-    )
+    storefs.write_json(spark, path, manifest)
     return IVFIndex(path=path, **manifest)
 
 
@@ -315,8 +282,7 @@ class IVFIndex:
     @classmethod
     def load(cls, path: str, spark: SparkSession | None = None) -> "IVFIndex":
         spark = active_or(spark)
-        text = _hadoop_read_text(spark, os.path.join(path, "manifest.json"))
-        return cls(path=path, **json.loads(text))
+        return cls(path=path, **storefs.read_json(spark, path))
 
     def _load_codebooks(self, spark: SparkSession) -> np.ndarray:
         rows = (
@@ -378,10 +344,7 @@ class IVFIndex:
     def _tombstones(self, spark: SparkSession) -> DataFrame | None:
         """Deleted-id table, or None when nothing was ever deleted."""
         tdir = os.path.join(self.path, "tombstones")
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(tdir)
-        if not p.getFileSystem(conf).exists(p):
+        if not storefs.exists(spark, tdir):
             return None
         return spark.read.parquet(tdir).select(self.id_col).distinct()
 
@@ -424,10 +387,10 @@ class IVFIndex:
         every :meth:`append` adds a wave of small part files per
         touched list, and probe-time scan cost grows with file count,
         not data. Tombstoned rows (see :meth:`delete`) are dropped in
-        the rewrite and the tombstone table is cleared. Same
-        write-tmp → delete → rename swap (and the same crash
-        contract) as LSHDedupStore.compact. Returns the number of
-        list rows rewritten (post-delete)."""
+        the rewrite and the tombstone table is cleared. The rewrite
+        lands in a tmp directory swapped in by
+        :func:`~marketdatapipeline_spark.data.storefs.replace_dir`.
+        Returns the number of list rows rewritten (post-delete)."""
         spark = active_or(spark)
         directory = os.path.join(self.path, "lists")
         df = spark.read.parquet(directory)
@@ -439,20 +402,10 @@ class IVFIndex:
         df.repartition(F.col("_cent")).write.mode("overwrite").partitionBy(
             "_cent"
         ).parquet(tmp)
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p_old = jvm.org.apache.hadoop.fs.Path(directory)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = p_old.getFileSystem(conf)
-        fs.delete(p_old, True)
-        fs.rename(p_tmp, p_old)
+        storefs.replace_dir(spark, tmp, directory)
         # tombstones are now physically applied — clear them (losing a
         # crash race here only re-applies an empty filter, never data)
-        t = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(self.path, "tombstones")
-        )
-        if fs.exists(t):
-            fs.delete(t, True)
+        storefs.delete(spark, os.path.join(self.path, "tombstones"))
         return rows
 
     def topk(

@@ -21,17 +21,15 @@ document text to the driver.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from marketdatapipeline_spark.data import storefs
 from marketdatapipeline_spark.textops.corpus import pack_shards
 
 __all__ = ["export_training_shards", "read_training_shards"]
-
-MANIFEST_NAME = "manifest.json"
 
 
 def export_training_shards(
@@ -85,10 +83,7 @@ def export_training_shards(
             for r in stats
         ],
     }
-    tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, MANIFEST_NAME))
+    storefs.write_json(df.sparkSession, path, manifest)
     return manifest
 
 
@@ -102,8 +97,7 @@ def read_training_shards(
     subset — the per-worker range assignment). ``verify=True`` checks
     the manifest totals against the data actually read (the training
     side of the reproducibility contract) and raises on mismatch."""
-    with open(os.path.join(path, MANIFEST_NAME)) as f:
-        manifest = json.load(f)
+    manifest = storefs.read_json(spark, path)
     df = spark.read.parquet(os.path.join(path, "data"))
     if shards is not None:
         df = df.filter(F.col("shard").isin([int(s) for s in shards]))

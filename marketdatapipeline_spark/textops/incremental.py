@@ -36,11 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marketdatapipeline_spark.caching import scoped_persist
+from marketdatapipeline_spark.data import storefs
 from marketdatapipeline_spark.session import active_or
-from marketdatapipeline_spark.similarity.index import (
-    _hadoop_read_text,
-    _hadoop_write_text,
-)
 from marketdatapipeline_spark.textops.dedup import minhash_doc_table
 
 __all__ = ["LSHDedupStore", "build_lsh_store"]
@@ -95,18 +92,16 @@ def build_lsh_store(
     tab = scoped_persist(minhash_doc_table(docs, num_hashes, id_col, text_col, n))
     gens = store._write_generation(tab)
     store._publish({"keys": [gens["keys"]], "sets": [gens["sets"]]})
-    _hadoop_write_text(
+    storefs.write_json(
         spark,
-        os.path.join(path, "manifest.json"),
-        json.dumps(
-            {
-                "threshold": threshold,
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "n": n,
-                "id_col": id_col,
-            }
-        ),
+        path,
+        {
+            "threshold": threshold,
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "n": n,
+            "id_col": id_col,
+        },
     )
     return store
 
@@ -129,8 +124,7 @@ class LSHDedupStore:
     @classmethod
     def load(cls, path: str, spark: SparkSession | None = None) -> "LSHDedupStore":
         spark = active_or(spark)
-        text = _hadoop_read_text(spark, os.path.join(path, "manifest.json"))
-        return cls(path=path, **json.loads(text))
+        return cls(path=path, **storefs.read_json(spark, path))
 
     # ------------------------------------------------------------------
     # manifest-committed storage (r7): every mutation writes its data
@@ -155,20 +149,13 @@ class LSHDedupStore:
     # numbers are allocated by listing, not by consensus.
     # ------------------------------------------------------------------
 
-    @staticmethod
-    def _fs(spark: SparkSession, path: str):
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return jvm, p.getFileSystem(conf)
-
     def _latest_commit(
         self, spark: SparkSession
     ) -> tuple[int, dict[str, list[str]]]:
         """(commit number, {table: [generation dir names]}); (-1, empty
         lists) for a store with no commits yet."""
         cdir = os.path.join(self.path, "_commits")
-        jvm, fs = self._fs(spark, cdir)
+        jvm, fs = storefs.fs(spark, cdir)
         p = jvm.org.apache.hadoop.fs.Path(cdir)
         if not fs.exists(p):
             return -1, {"keys": [], "sets": []}
@@ -182,10 +169,7 @@ class LSHDedupStore:
                     continue
         if best < 0:
             return -1, {"keys": [], "sets": []}
-        payload = json.loads(
-            _hadoop_read_text(spark, os.path.join(cdir, f"{best:012d}.json"))
-        )
-        return best, payload
+        return best, storefs.read_json(spark, cdir, f"{best:012d}.json")
 
     def _publish(
         self, payload: dict[str, list[str]], spark: SparkSession | None = None
@@ -198,8 +182,8 @@ class LSHDedupStore:
         cdir = os.path.join(self.path, "_commits")
         target = os.path.join(cdir, f"{n + 1:012d}.json")
         tmp = os.path.join(cdir, f".{n + 1:012d}.json.tmp")
-        _hadoop_write_text(spark, tmp, json.dumps(payload))
-        jvm, fs = self._fs(spark, cdir)
+        storefs.write_text(spark, tmp, json.dumps(payload))
+        jvm, fs = storefs.fs(spark, cdir)
         ok = fs.rename(
             jvm.org.apache.hadoop.fs.Path(tmp),
             jvm.org.apache.hadoop.fs.Path(target),
@@ -244,7 +228,7 @@ class LSHDedupStore:
         plan: dict[str, tuple[list, list[str]]] = {}
         for sub in ("keys", "sets"):
             tdir = os.path.join(self.path, sub)
-            jvm, fs = self._fs(spark, tdir)
+            jvm, fs = storefs.fs(spark, tdir)
             p = jvm.org.apache.hadoop.fs.Path(tdir)
             if not fs.exists(p):
                 return False
@@ -265,7 +249,7 @@ class LSHDedupStore:
         moved: dict[str, list[str]] = {}
         for sub in ("keys", "sets"):
             tdir = os.path.join(self.path, sub)
-            jvm, fs = self._fs(spark, tdir)
+            jvm, fs = storefs.fs(spark, tdir)
             flat, stranded = plan[sub]
             gens = list(stranded)
             if flat:
@@ -351,7 +335,7 @@ class LSHDedupStore:
         for sub in ("keys", "sets"):
             live = set(payload.get(sub, []))
             tdir = os.path.join(self.path, sub)
-            jvm, fs = self._fs(spark, tdir)
+            jvm, fs = storefs.fs(spark, tdir)
             p = jvm.org.apache.hadoop.fs.Path(tdir)
             if not fs.exists(p):
                 continue
@@ -408,7 +392,7 @@ class LSHDedupStore:
         # is still pinned to the pre-compaction snapshot.
         if vacuum_superseded:
             for sub in ("keys", "sets"):
-                jvm, fs = self._fs(spark, self.path)
+                jvm, fs = storefs.fs(spark, self.path)
                 for g in before.get(sub, []):
                     fs.delete(
                         jvm.org.apache.hadoop.fs.Path(

@@ -33,10 +33,11 @@ partition-pruned read of the touched buckets (never the whole
 store), one idempotence anti-join on id (at-least-once sources
 re-deliver; a re-delivered id is a no-op, not a duplicate document),
 one Arrow walk over the touched buckets, and a write-tmp → rename
-swap of exactly those bucket directories (the
-``IVFIndex.compact`` crash contract: the swap is per-bucket atomic,
-and a crash between buckets leaves previous-generation directories —
-re-ingesting the batch repairs them because ingest is idempotent).
+swap of exactly those bucket directories, one
+:func:`~marketdatapipeline_spark.data.storefs.replace_dir` per
+bucket (a crash between buckets leaves previous-generation
+directories — re-ingesting the batch repairs them because ingest is
+idempotent).
 
 Single-writer batch semantics, like every store in this repo:
 concurrent ingests are not coordinated — front a queue in
@@ -51,18 +52,14 @@ scale, mirroring ``pack_sequences``).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketdatapipeline_spark.caching import scoped_persist
+from marketdatapipeline_spark.data import storefs
 from marketdatapipeline_spark.session import active_or
-from marketdatapipeline_spark.similarity.index import (
-    _hadoop_read_text,
-    _hadoop_write_text,
-)
 from marketdatapipeline_spark.textops.corpus import (
     globalize_bins,
     pack_input_rows,
@@ -70,13 +67,6 @@ from marketdatapipeline_spark.textops.corpus import (
 )
 
 __all__ = ["IncrementalPackingStore", "build_packing_store"]
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf)
 
 
 class IncrementalPackingStore:
@@ -111,20 +101,14 @@ class IncrementalPackingStore:
             "n_docs": 0,
             "n_batches": 0,
         }
-        _hadoop_write_text(
-            spark, os.path.join(path, "manifest.json"), json.dumps(manifest)
-        )
+        storefs.write_json(spark, path, manifest)
         return cls(path, manifest)
 
     @classmethod
     def open(
         cls, path: str, spark: SparkSession | None = None
     ) -> "IncrementalPackingStore":
-        spark = active_or(spark)
-        manifest = json.loads(
-            _hadoop_read_text(spark, os.path.join(path, "manifest.json"))
-        )
-        return cls(path, manifest)
+        return cls(path, storefs.read_json(active_or(spark), path))
 
     # -- ingest -------------------------------------------------------
 
@@ -187,15 +171,15 @@ class IncrementalPackingStore:
         new_local = walk_pack_buckets(walk_in, cap, id_col, m["id_type"])
         tmp = packed_dir + "__ingest_tmp"
         new_local.write.mode("overwrite").partitionBy("_b").parquet(tmp)
-        self._swap_buckets(spark, tmp, packed_dir, touched)
+        for b in touched:
+            storefs.replace_dir(
+                spark, os.path.join(tmp, f"_b={b}"), os.path.join(packed_dir, f"_b={b}")
+            )
+        storefs.delete(spark, tmp)
 
         m["n_docs"] += int(n_new)
         m["n_batches"] += 1
-        _hadoop_write_text(
-            spark,
-            os.path.join(self.path, "manifest.json"),
-            json.dumps(m),
-        )
+        storefs.write_json(spark, self.path, m)
         return {
             "n_new": int(n_new),
             "n_redelivered": int(n_redelivered),
@@ -237,29 +221,13 @@ class IncrementalPackingStore:
         self, spark: SparkSession, buckets: list[int] | None = None
     ) -> DataFrame | None:
         packed_dir = os.path.join(self.path, "packed")
-        jvm, fs = _fs(spark, packed_dir)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(packed_dir)):
+        if not storefs.exists(spark, packed_dir):
             return None
         df = spark.read.parquet(packed_dir)
         if buckets is not None:
             df = df.filter(F.col("_b").isin(buckets))
         # partition-column type normalization (discovery infers int)
         return df.withColumn("_b", F.col("_b").cast("long"))
-
-    def _swap_buckets(
-        self, spark: SparkSession, tmp: str, dest: str, buckets: list[int]
-    ) -> None:
-        jvm, fs = _fs(spark, dest)
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs.mkdirs(Path(dest))
-        for b in buckets:
-            src = Path(os.path.join(tmp, f"_b={b}"))
-            dst = Path(os.path.join(dest, f"_b={b}"))
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            if fs.exists(src):
-                fs.rename(src, dst)
-        fs.delete(Path(tmp), True)
 
 
 def build_packing_store(

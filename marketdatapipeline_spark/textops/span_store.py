@@ -51,18 +51,14 @@ id filter when exact doc counts matter.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketdatapipeline_spark.caching import scoped_persist
+from marketdatapipeline_spark.data import storefs
 from marketdatapipeline_spark.session import active_or
-from marketdatapipeline_spark.similarity.index import (
-    _hadoop_read_text,
-    _hadoop_write_text,
-)
 from marketdatapipeline_spark.textops.dedup import md5_int
 
 __all__ = ["SpanDedupStore", "build_span_store"]
@@ -97,20 +93,14 @@ class SpanDedupStore:
             "n_batches": 0,
             "n_gram_hashes": 0,
         }
-        _hadoop_write_text(
-            spark, os.path.join(path, "manifest.json"), json.dumps(manifest)
-        )
+        storefs.write_json(spark, path, manifest)
         return cls(path, manifest)
 
     @classmethod
     def open(
         cls, path: str, spark: SparkSession | None = None
     ) -> "SpanDedupStore":
-        spark = active_or(spark)
-        manifest = json.loads(
-            _hadoop_read_text(spark, os.path.join(path, "manifest.json"))
-        )
-        return cls(path, manifest)
+        return cls(path, storefs.read_json(active_or(spark), path))
 
     # -- ingest -------------------------------------------------------
 
@@ -203,11 +193,7 @@ class SpanDedupStore:
         m["n_docs"] += int(n_batch_docs)
         m["n_batches"] += 1
         m["n_gram_hashes"] += int(n_novel)
-        _hadoop_write_text(
-            spark,
-            os.path.join(self.path, "manifest.json"),
-            json.dumps(m),
-        )
+        storefs.write_json(spark, self.path, m)
         return stats
 
     def foreach_batch(self):
@@ -227,8 +213,9 @@ class SpanDedupStore:
         wave of small part files and probe-join planning cost grows
         with file count, not data. Hash rows are already distinct by
         construction (the ingest anti-join), so this is purely a file
-        merge: the write-tmp → delete → rename swap and crash
-        contract of ``IVFIndex.compact``. Returns the hash count."""
+        merge, written to a tmp directory and swapped in by
+        :func:`~marketdatapipeline_spark.data.storefs.replace_dir`.
+        Returns the hash count."""
         spark = active_or(spark)
         directory = os.path.join(self.path, "grams")
         df = self._read_hashes(spark)
@@ -239,23 +226,14 @@ class SpanDedupStore:
         df.coalesce(max(1, rows // 2_000_000 + 1)).write.mode(
             "overwrite"
         ).parquet(tmp)
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p_old = jvm.org.apache.hadoop.fs.Path(directory)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = p_old.getFileSystem(conf)
-        fs.delete(p_old, True)
-        fs.rename(p_tmp, p_old)
+        storefs.replace_dir(spark, tmp, directory)
         return rows
 
     # -- internals ----------------------------------------------------
 
     def _read_hashes(self, spark: SparkSession) -> DataFrame | None:
         path = os.path.join(self.path, "grams")
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        if not p.getFileSystem(conf).exists(p):
+        if not storefs.exists(spark, path):
             return None
         return spark.read.parquet(path)
 

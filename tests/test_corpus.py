@@ -688,6 +688,27 @@ def test_training_shard_export_round_trip(spark, tmp_path):
         read_training_shards(spark, path, verify=True)
 
 
+def test_training_shard_export_round_trip_file_uri(spark, tmp_path):
+    """Export to and read back from a ``file://`` URI: the manifest
+    goes through the same Hadoop filesystem as the shard data."""
+    from marketdatapipeline_spark.textops.export import (
+        export_training_shards,
+        read_training_shards,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "word " * (10 + i % 7)) for i in range(40)], ["doc_id", "text"]
+    )
+    uri = (tmp_path / "shards").as_uri()
+    assert uri.startswith("file://")
+    man = export_training_shards(docs, uri, target_chars=400)
+    assert man["n_docs"] == 40 and man["n_shards"] >= 2
+    assert (tmp_path / "shards" / "manifest.json").is_file()
+    assert read_training_shards(spark, uri, verify=True).count() == 40
+    some = read_training_shards(spark, uri, shards=[1], verify=True)
+    assert {r[0] for r in some.select("shard").distinct().collect()} == {1}
+
+
 def test_systematic_weighted_sample_matches_python_reference(spark):
     """r12: the PPS systematic sample must select exactly the rows a
     scalar reference selects (same decimal->double->floor pipeline),

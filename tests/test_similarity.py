@@ -932,10 +932,7 @@ def test_hadoop_text_roundtrip_multibyte(spark, tmp_path):
     """Manifest/commit files round-trip byte-exact through the Hadoop
     FS helpers: a multi-KB payload whose multi-byte UTF-8 characters
     straddle every buffer boundary."""
-    from marketdatapipeline_spark.similarity.index import (
-        _hadoop_read_text,
-        _hadoop_write_text,
-    )
+    from marketdatapipeline_spark.data.storefs import read_text, write_text
 
     text = "".join(
         f'{{"gen": "gen-{i:05d}", "note": "naïve café — 日本語 ü 😀"}}\n'
@@ -943,5 +940,5 @@ def test_hadoop_text_roundtrip_multibyte(spark, tmp_path):
     )
     assert len(text.encode("utf-8")) > 16_384
     path = str(tmp_path / "commit.json")
-    _hadoop_write_text(spark, path, text)
-    assert _hadoop_read_text(spark, path) == text
+    write_text(spark, path, text)
+    assert read_text(spark, path) == text
