@@ -90,12 +90,12 @@ def replicated_bars(spark, sf_dir: str, copies: int, multi_symbol: bool):
 def feature_pipeline(bars):
     from marketdatapipeline_spark.features import compute_all_features
 
-    # target_horizon=1 fuses target generation into the narrow window
-    # stage; engine="auto" probes the symbol cardinality ONCE at plan
-    # time (outside the timed materializations) and routes monster
-    # single-symbol frames to the halo-chunked engine.
+    # target_horizon=1 fuses target generation into the kernel stage;
+    # compute_all_features probes the row count and symbol cardinality
+    # ONCE at plan time (outside the timed materializations) and routes
+    # monster single-symbol frames to the halo-chunked layout.
     return compute_all_features(
-        bars, order_cols=("datetime", "bar_id"), target_horizon=1, engine="auto"
+        bars, order_cols=("datetime", "bar_id"), target_horizon=1
     )
 
 

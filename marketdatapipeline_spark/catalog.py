@@ -28,10 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marketdatapipeline_spark.caching import release_caches
-from marketdatapipeline_spark.features import (
-    compute_all_features,
-    generate_targets,
-)
+from marketdatapipeline_spark.features import generate_targets
 from marketdatapipeline_spark.features.engineering import (
     EPS,
     compute_volatility_features,

@@ -19,11 +19,13 @@ all-features batch job, exactly how the reference runs it (vectorized
 kernels over one symbol's frame, reference src/main.py:63-87), but
 distributed across symbols.
 
-Scale: per-symbol history must fit one task (same bound as the
-reference's per-symbol DataFrame). Thousands of symbols spread across
-executors; a monster single-symbol series is the one shape this path
-cannot split — that is what the blocked-scan EWMA + prefix-sum rolling
-operators (features/ewm.py, features/windows.py) exist for.
+Scale: with one group per symbol (:func:`compute_all_features_arrow`),
+per-symbol history must fit one task (same bound as the reference's
+per-symbol DataFrame). Thousands of symbols spread across executors; a
+monster single-symbol series is the one shape that layout cannot split
+— :func:`compute_all_features_chunked` runs the same kernel over
+halo-overlap blocks of each symbol instead. ``compute_all_features``
+picks the layout from one size probe (``CHUNKED_ROWS_PER_SYMBOL``).
 
 Semantics preserved bit-for-bit with the reference (pandas ewm/rolling
 match Polars for these parameters): traps T1 (min_periods), T2 (the
@@ -35,13 +37,16 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.group import GroupedData
+
+from marketdatapipeline_spark.features.ewm import nan_to_null
 
 EPS = 1e-10
 PI_LITERAL = 3.14159
 
 #: upper bound on rows funneled through one applyInPandas task when
-#: the caller knows the input size (the engine="auto" probe passes it
-#: down). Two reasons: (a) per-task memory/stream volume stays flat as
+#: the caller knows the input size (compute_all_features' size probe
+#: passes it down). Two reasons: (a) per-task memory/stream volume stays flat as
 #: the input grows — the shuffle partition count scales instead of the
 #: task size, which is the only shape that survives 100 TB; (b) at
 #: ~3M rows/task the 100M-row bench wedged Spark 4's single-threaded
@@ -55,6 +60,11 @@ PI_LITERAL = 3.14159
 #: error instead of a round-killing hang. MDP_PY_UDS=1 remains the
 #: transport-level cure (no TCP window machinery at all).
 TARGET_ROWS_PER_TASK = 750_000
+
+#: average rows per symbol above which compute_all_features runs the
+#: chunked layout: one symbol's history is then split across tasks
+#: instead of funneled through one.
+CHUNKED_ROWS_PER_SYMBOL = 200_000
 
 #: upper bound on block count for the plan-time-boundary layout in
 #: :func:`_range_block_layout`. Above it (≈ 67M rows at the default
@@ -322,7 +332,7 @@ def feature_schema_fields(
     target_type: str,
 ) -> list[str]:
     """Feature column DDL fragments appended to the input schema by the
-    full pipeline — shared by the Arrow and chunked engines."""
+    full pipeline — shared by both row layouts."""
     fields = [
         "rsi double", "macd double", "macd_signal double", "macd_histogram double",
         "bb_middle double", "bb_upper double", "bb_lower double", "bb_width double",
@@ -350,6 +360,65 @@ def feature_schema_fields(
     return fields
 
 
+class _Kernel:
+    """The per-group feature kernel both layouts run: parameter
+    defaults, the output schema (input columns + feature columns), the
+    applyInPandas call, and pandas NaN -> Spark NULL over the double
+    features so downstream filters and the SQL oracle agree with the
+    Polars-null reference semantics."""
+
+    def __init__(
+        self,
+        df: DataFrame,
+        datetime_col: str,
+        momentum_periods: tuple[int, ...] | None,
+        volatility_windows: tuple[int, ...] | None,
+        order_cols: tuple[str, ...] | None,
+        rsi_period: int,
+        macd_fast: int,
+        macd_slow: int,
+        macd_signal: int,
+        bb_period: int,
+        bb_std: float,
+        target_horizon: int | None,
+        target_type: str,
+    ) -> None:
+        self.order = list(order_cols or (datetime_col,))
+        self.momentum_periods = tuple(momentum_periods or (5, 10, 20, 50))
+        self.volatility_windows = tuple(volatility_windows or (10, 20, 60))
+        has_hl = "high" in df.columns and "low" in df.columns
+        self.fields = feature_schema_fields(
+            has_hl, self.momentum_periods, self.volatility_windows,
+            target_horizon, target_type,
+        )
+        self.schema = ", ".join(
+            [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
+            + self.fields
+        )
+        self.args = (
+            self.order, self.momentum_periods, self.volatility_windows,
+            rsi_period, macd_fast, macd_slow, macd_signal,
+            bb_period, bb_std, datetime_col, target_horizon, target_type,
+        )
+
+    def apply(self, grouped: GroupedData, drop_halo: bool = False) -> DataFrame:
+        """Run the kernel per group of ``grouped``. ``drop_halo``: the
+        groups carry the chunked layout's ``_blk``/``_halo`` columns;
+        halo rows and both columns leave after the kernel."""
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            feat = _feature_frame(pdf, *self.args)
+            if drop_halo:
+                feat = feat[~feat["_halo"].to_numpy(dtype=bool)]
+                feat = feat.drop(columns=["_blk", "_halo"])
+            return feat
+
+        out = grouped.applyInPandas(run, schema=self.schema)
+        return nan_to_null(
+            out, [f.split(" ")[0] for f in self.fields if f.endswith("double")]
+        )
+
+
 def compute_all_features_arrow(
     df: DataFrame,
     datetime_col: str = "datetime",
@@ -370,13 +439,10 @@ def compute_all_features_arrow(
     """Distributed full-feature computation, one Arrow pass per symbol.
 
     Same signature semantics as
-    :func:`marketdatapipeline_spark.features.engineering.compute_all_features`
-    (plus the fused target options); NaNs produced by pandas map back
-    to Spark NULLs afterwards so downstream filters and the SQL oracle
-    agree with the Polars-null reference semantics.
+    :func:`marketdatapipeline_spark.features.engineering.compute_all_features`.
 
-    ``n_rows`` (when the caller knows the input size — the
-    engine="auto" probe passes it) widens the kernel exchange so no
+    ``n_rows`` (when the caller knows the input size — the size probe
+    in ``compute_all_features`` passes it) widens the kernel exchange so no
     task carries more than ~``TARGET_ROWS_PER_TASK`` rows: an explicit
     hash repartition on the group key satisfies applyInPandas'
     clustering requirement at ANY partition count, so this is one
@@ -384,26 +450,11 @@ def compute_all_features_arrow(
     for the session default keep the plain groupBy exchange (AQE
     coalescing stays available there).
     """
-    momentum_periods = tuple(momentum_periods or (5, 10, 20, 50))
-    volatility_windows = tuple(volatility_windows or (10, 20, 60))
-    order = list(order_cols or (datetime_col,))
-    has_hl = "high" in df.columns and "low" in df.columns
-
-    feature_fields = feature_schema_fields(
-        has_hl, momentum_periods, volatility_windows, target_horizon, target_type
+    kernel = _Kernel(
+        df, datetime_col, momentum_periods, volatility_windows, order_cols,
+        rsi_period, macd_fast, macd_slow, macd_signal, bb_period, bb_std,
+        target_horizon, target_type,
     )
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + feature_fields
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _feature_frame(
-            pdf, order, momentum_periods, volatility_windows,
-            rsi_period, macd_fast, macd_slow, macd_signal,
-            bb_period, bb_std, datetime_col, target_horizon, target_type,
-        )
-
     if n_rows is not None:
         session_parts = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -411,14 +462,7 @@ def compute_all_features_arrow(
         parts = -(-int(n_rows) // TARGET_ROWS_PER_TASK)
         if parts > session_parts:
             df = df.repartition(parts, symbol_col)
-    out = df.groupBy(symbol_col).applyInPandas(run, schema=schema)
-
-    from marketdatapipeline_spark.features.ewm import nan_to_null
-
-    double_cols = [
-        f.split(" ")[0] for f in feature_fields if f.endswith("double")
-    ]
-    return nan_to_null(out, double_cols)
+    return kernel.apply(df.groupBy(symbol_col))
 
 
 def compute_all_features_chunked(
@@ -482,13 +526,14 @@ def compute_all_features_chunked(
 
     from pyspark.sql import functions as F
 
-    momentum_periods = tuple(momentum_periods or (5, 10, 20, 50))
-    volatility_windows = tuple(volatility_windows or (10, 20, 60))
-    order = list(order_cols or (datetime_col,))
-    has_hl = "high" in df.columns and "low" in df.columns
+    kernel = _Kernel(
+        df, datetime_col, momentum_periods, volatility_windows, order_cols,
+        rsi_period, macd_fast, macd_slow, macd_signal, bb_period, bb_std,
+        target_horizon, target_type,
+    )
     longest = max(
         bb_period, rsi_period, macd_slow, macd_signal,
-        *momentum_periods, *volatility_windows,
+        *kernel.momentum_periods, *kernel.volatility_windows,
     )
     # halo must cover the longest rolling window exactly and the EWM
     # warmup overwhelmingly (r^halo << ulp needs halo >> 36*span)
@@ -537,7 +582,7 @@ def compute_all_features_chunked(
     # the full upstream as a sampling pass on EVERY action and
     # re-seeded its boundaries per action (the hazard the paragraph
     # above documents). Same contiguous-range-per-partition contract.
-    src = _range_block_layout(df, [symbol_col, *order], nb, n)
+    src = _range_block_layout(df, [symbol_col, *kernel.order], nb, n)
     # Materialize the id ONCE, then split bits in a second projection:
     # embedding the same MonotonicallyIncreasingID instance in two
     # output columns is only safe under codegen (each occurrence gets
@@ -575,37 +620,12 @@ def compute_all_features_chunked(
         F.col("_t.h").alias("_halo"),
     )
 
-    feature_fields = feature_schema_fields(
-        has_hl, momentum_periods, volatility_windows, target_horizon, target_type
-    )
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + feature_fields
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        feat = _feature_frame(
-            pdf, order, momentum_periods, volatility_windows,
-            rsi_period, macd_fast, macd_slow, macd_signal,
-            bb_period, bb_std, datetime_col, target_horizon, target_type,
-        )
-        feat = feat[~feat["_halo"].to_numpy(dtype=bool)]
-        return feat.drop(columns=["_blk", "_halo"])
-
     # Pin the kernel stage's parallelism: an explicit hash repartition
     # on the group keys satisfies applyInPandas' clustering requirement
     # (no second exchange) and is exempt from AQE coalescing, which
     # would otherwise fold the Python-heavy kernel tasks into a few
     # 64MB-advisory partitions and serialize them.
-    out = (
-        u.repartition(4 * nb, symbol_col, "_blk")
-        .groupBy(symbol_col, "_blk")
-        .applyInPandas(run, schema=schema)
+    return kernel.apply(
+        u.repartition(4 * nb, symbol_col, "_blk").groupBy(symbol_col, "_blk"),
+        drop_halo=True,
     )
-
-    from marketdatapipeline_spark.features.ewm import nan_to_null
-
-    double_cols = [
-        f.split(" ")[0] for f in feature_fields if f.endswith("double")
-    ]
-    return nan_to_null(out, double_cols)

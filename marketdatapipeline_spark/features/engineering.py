@@ -2,11 +2,12 @@
 
 Re-expresses reference src/features/engineering.py on one multi-symbol
 DataFrame. The reference holds one eager frame per symbol and loops in
-Python (reference src/main.py:63-87); here every sequence operator is a
-window over ``Window.partitionBy(symbol).orderBy(datetime)`` — a single
-hash exchange on ``symbol``, after which all ~50 columns compute in one
-whole-stage-codegen'd Window stage, embarrassingly parallel across
-symbols and spill-safe at any data size.
+Python (reference src/main.py:63-87); here every per-family operator
+is a window over ``Window.partitionBy(symbol).orderBy(datetime)`` — a
+single hash exchange on ``symbol``, embarrassingly parallel across
+symbols and spill-safe at any data size. ``compute_all_features`` runs
+all families as one vectorized kernel per symbol instead
+(features/arrow_engine.py); the per-family chain is its test reference.
 
 Semantics faithfully preserved (SURVEY.md §2 traps):
   T1  rolling aggregates NULL until the window is full (windows.py)
@@ -27,10 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from marketdatapipeline_spark.features.ewm import (
-    add_technical_ewm_features_native,
-    drop_block_columns,
-)
+from marketdatapipeline_spark.features import arrow_engine
+from marketdatapipeline_spark.features.ewm import add_technical_ewm_features_native
 from marketdatapipeline_spark.features.windows import (
     RollingPlan,
     rolling_mean,
@@ -280,138 +279,46 @@ def compute_all_features(
     bb_std: float = 2.0,
     target_horizon: int | None = None,
     target_type: str = "classification",
-    engine: str = "arrow",
 ) -> DataFrame:
     """All feature families (reference engineering.py:198-226): 7 input
     columns (symbol + OHLCV + datetime) -> 55; generate_targets adds the
-    56th (or pass ``target_horizon`` to fuse it).
+    56th (or pass ``target_horizon`` to fuse it, reference
+    targets.py:30-43).
 
-    ``engine="arrow"`` (default): one groupBy(symbol).applyInPandas
-    pass — single exchange, vectorized per-symbol kernels, the fastest
-    strategy for the full 56-column derivation (see
-    features/arrow_engine.py for the measured rationale).
-    ``engine="chunked"``: the arrow kernel over halo-overlap blocks of
-    each symbol — the scale path for monster single-symbol series
-    (per-symbol history no longer bound to one task).
-    ``engine="auto"``: one cheap aggregation probe (count +
-    approx_count_distinct) routes to ``chunked`` when the average
-    per-symbol history exceeds ~200k rows, else ``arrow``.
-    ``engine="sql"``: pure window-operator plan — every feature as a
-    native Catalyst expression (prefix-sum rolling aggregates, blocked
-    EWMA scan). Composable with further relational ops, but the 10+
-    chained Window nodes cost more for the full batch derivation.
-
-    ``target_horizon`` fuses target generation (reference
-    targets.py:30-43) into the same stage; in the SQL engine the
-    lead(close) primitive computes while the frame is still narrow, so
-    the wide 56-column result never passes through a window buffer —
-    windows copy every buffered row, so row width inside them is the
-    dominant cost at scale.
+    One vectorized per-symbol kernel (features/arrow_engine.py) whose
+    row layout is chosen by size: one aggregation probe (count +
+    count(distinct symbol)) routes to the halo-overlap chunked
+    layout when the average per-symbol history exceeds
+    ``arrow_engine.CHUNKED_ROWS_PER_SYMBOL`` — a monster single-symbol
+    series no longer bound to one task — else to one group per symbol,
+    whose kernel exchange the probed row count widens past the session
+    default (``arrow_engine.TARGET_ROWS_PER_TASK``). The two layouts
+    return the same rows and values.
     """
-    probed_n: int | None = None
-    if engine == "auto":
-        n, syms = df.agg(
-            F.count("*"), F.approx_count_distinct(symbol_col)
-        ).first()
-        probed_n = n
-        engine = "chunked" if syms and n / syms > 200_000 else "arrow"
-    if engine in ("arrow", "chunked"):
-        from marketdatapipeline_spark.features.arrow_engine import (
-            compute_all_features_arrow,
-            compute_all_features_chunked,
-        )
-
-        impl = (
-            compute_all_features_arrow if engine == "arrow"
-            else compute_all_features_chunked
-        )
-        # both engines use the probed size: chunked for block layout,
-        # arrow to widen the kernel exchange past the session default
-        # (rows-per-task cap — see arrow_engine.TARGET_ROWS_PER_TASK)
-        extra = {"n_rows": probed_n} if probed_n is not None else {}
-        return impl(
-            df,
-            **extra,
-            datetime_col=datetime_col,
-            momentum_periods=momentum_periods,
-            volatility_windows=volatility_windows,
-            symbol_col=symbol_col,
-            order_cols=order_cols,
-            rsi_period=rsi_period,
-            macd_fast=macd_fast,
-            macd_slow=macd_slow,
-            macd_signal=macd_signal,
-            bb_period=bb_period,
-            bb_std=bb_std,
-            target_horizon=target_horizon,
-            target_type=target_type,
-        )
-    if engine != "sql":
-        raise ValueError(f"Unknown engine: {engine}")
-    momentum_periods = tuple(momentum_periods or (5, 10, 20, 50))
-    volatility_windows = tuple(volatility_windows or (10, 20, 60))
-    order_cols = tuple(order_cols or (datetime_col,))
-    _require(df, ("close", datetime_col))
-
-    # 1) EWMA pass: rsi/macd/macd_signal/macd_histogram on the narrow
-    #    input frame, before the window stage.
-    kwargs = dict(
+    # exact distinct count: it is order-irrelevant, so the optimizer
+    # drops an upstream global sort (ingestion's orderBy) from the probe;
+    # approx_count_distinct keeps it — a sampling job, a range exchange
+    # and a sort per call
+    n, syms = df.agg(F.count("*"), F.count_distinct(symbol_col)).first()
+    layout = (
+        arrow_engine.compute_all_features_chunked
+        if syms and n / syms > arrow_engine.CHUNKED_ROWS_PER_SYMBOL
+        else arrow_engine.compute_all_features_arrow
+    )
+    return layout(
+        df,
+        n_rows=n,
+        datetime_col=datetime_col,
+        momentum_periods=momentum_periods,
+        volatility_windows=volatility_windows,
+        symbol_col=symbol_col,
+        order_cols=order_cols,
         rsi_period=rsi_period,
         macd_fast=macd_fast,
         macd_slow=macd_slow,
         macd_signal=macd_signal,
-        symbol_col=symbol_col,
-        order_cols=order_cols,
+        bb_period=bb_period,
+        bb_std=bb_std,
+        target_horizon=target_horizon,
+        target_type=target_type,
     )
-    # keep the blocked scan's _blk column so every window below can
-    # order by (_blk, *order) — same results (monotone _blk), one
-    # shared physical sort across the EWMA and rolling stages.
-    df = add_technical_ewm_features_native(df, keep_block_columns=True, **kwargs)
-    window_order = ("_blk", *order_cols)
-
-    # 2) Native window stage, O(n) per column: offsets (lag) and
-    #    running prefix sums materialize once per distinct primitive
-    #    (Catalyst does not deduplicate repeated window expressions),
-    #    rolling aggregates derive from prefix-sum differences
-    #    (RollingPlan — Spark's sliding frames are O(rows x window)),
-    #    and every feature is a plain codegen'd projection over them.
-    #    All window nodes share one partitioning and order: ONE
-    #    exchange + sort for the whole stage.
-    w = _base_window(symbol_col, window_order)
-    has_hl = "high" in df.columns and "low" in df.columns
-    close = F.col("close")
-    prev = F.lag(close, 1).over(w)
-
-    base_plan = RollingPlan(w)  # close + hl aggregates
-    ret_plan = RollingPlan(w, tag="t")  # aggregates over `returns`
-
-    offsets = {
-        **_momentum_offsets(momentum_periods, w),
-        "returns": (close - prev) / prev,
-    }
-    outputs = {
-        **_bollinger_outputs(bb_period, bb_std, base_plan),
-        **_momentum_outputs(momentum_periods, base_plan),
-        **_volatility_outputs(volatility_windows, has_hl, base_plan, ret_plan),
-        **temporal_expressions(datetime_col),
-    }
-    if target_horizon is not None:
-        offsets["_lead_close"] = F.lead(close, target_horizon).over(w)
-        fwd = (F.col("_lead_close") - close) / close
-        if target_type == "classification":
-            outputs["target"] = (fwd > 0).cast("tinyint")
-        elif target_type == "regression":
-            outputs["target"] = fwd
-        else:
-            raise ValueError(f"Unsupported target type: {target_type}")
-    step = base_plan.materialize(df.withColumns(offsets))
-    step = ret_plan.materialize(step)
-    out = step.withColumns(outputs).drop(
-        *base_plan.temp_columns,
-        *ret_plan.temp_columns,
-        *[c for c in offsets if c.startswith("_")],
-    )
-    out = drop_block_columns(out)
-    if target_horizon is not None:
-        out = out.drop("_lead_close").filter(F.col("target").isNotNull())
-    return out

@@ -331,7 +331,6 @@ def add_technical_ewm_features_native(
     symbol_col: str = "symbol",
     order_cols: tuple[str, ...] = ("datetime",),
     close_col: str = "close",
-    keep_block_columns: bool = False,
 ) -> DataFrame:
     """rsi / macd / macd_signal / macd_histogram without Python workers.
 
@@ -339,8 +338,7 @@ def add_technical_ewm_features_native(
     path, kept as the exactness reference) to ~1e-12 relative. Two
     :func:`add_ewm_native` passes sharing one blocking: close EMAs +
     Wilder gain/loss smoothing, then the signal EMA over the derived
-    macd line. With ``keep_block_columns`` the caller can reuse the
-    (_blk, *order) sort for its own downstream windows.
+    macd line.
     """
     B = ewm_block_size((macd_fast, macd_slow, rsi_period, macd_signal))
     w = Window.partitionBy(symbol_col).orderBy(*[F.col(c) for c in order_cols])
@@ -372,7 +370,6 @@ def add_technical_ewm_features_native(
         symbol_col=symbol_col,
         order_cols=order_cols,
         block_size=B,
-        keep_block_columns=keep_block_columns,
     )
     rs = F.col("_avg_gain") / (F.col("_avg_loss") + F.lit(1e-10))
     return out.withColumns(

@@ -71,9 +71,9 @@ def global_row_number(
     cumsum_out_name}`` — the grand total of a cumsum column as a
     literal column, free from the same driver pass.
 
-    ``single_task_threshold`` routes by size (the engine="auto"
-    pattern): the input is persisted and counted once; at or below
-    the threshold the classic single-partition window runs — for a
+    ``single_task_threshold`` routes by size (like the size probe in
+    compute_all_features): the input is persisted and counted once; at
+    or below the threshold the classic single-partition window runs — for a
     few million rows one task sorts faster than the distributed
     machinery's extra jobs (range-bounds sampling + offset collect)
     — and above it the range-partitioned path takes over. Both paths

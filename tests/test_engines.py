@@ -1,36 +1,90 @@
-"""Arrow engine vs SQL engine: same 56-column output, same values."""
+"""compute_all_features and its two row layouts (one group per symbol,
+halo-overlap chunks) against the per-family operators and each other:
+same 56-column output, same values."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from marketdatapipeline_spark.features import compute_all_features
+from marketdatapipeline_spark.features import (
+    arrow_engine,
+    compute_all_features,
+    compute_momentum_features,
+    compute_technical_features,
+    compute_temporal_features,
+    compute_volatility_features,
+    generate_targets,
+)
+from marketdatapipeline_spark.features.arrow_engine import compute_all_features_arrow
+from marketdatapipeline_spark.plan_checks import _plan_children, _seq
 
 
-def test_engines_agree(spark, bars_df):
-    a = (
-        compute_all_features(bars_df, engine="arrow", target_horizon=1)
-        .orderBy("symbol", "datetime")
-        .toPandas()
-    )
-    s = (
-        compute_all_features(bars_df, engine="sql", target_horizon=1)
-        .orderBy("symbol", "datetime")
-        .toPandas()
-    )
-    assert list(sorted(a.columns)) == list(sorted(s.columns))
-    assert len(a) == len(s)
+def reference_features(df):
+    """The parity reference: the public per-family operators, each
+    oracle-checked on its own, chained as the reference chains them
+    (reference engineering.py:198-226), plus a horizon-1 target."""
+    out = compute_technical_features(df)
+    out = compute_momentum_features(out)
+    out = compute_volatility_features(out)
+    out = compute_temporal_features(out)
+    return generate_targets(out, 1)
+
+
+def _assert_same(a, b, atol=1e-9):
+    assert sorted(a.columns) == sorted(b.columns)
+    assert len(a) == len(b)
     for c in a.columns:
         if a[c].dtype.kind == "f":
             assert np.allclose(
                 a[c].to_numpy("float64"),
-                s[c].to_numpy("float64"),
+                b[c].to_numpy("float64"),
                 rtol=1e-9,
-                atol=1e-9,
+                atol=atol,
                 equal_nan=True,
             ), c
         else:
-            assert (a[c].to_numpy() == s[c].to_numpy()).all(), c
+            assert (a[c].to_numpy() == b[c].to_numpy()).all(), c
+
+
+def test_engines_agree(spark, bars_df):
+    a = (
+        compute_all_features(bars_df, target_horizon=1)
+        .orderBy("symbol", "datetime")
+        .toPandas()
+    )
+    ref = reference_features(bars_df)
+    assert dict(ref.dtypes)["target"] == "tinyint"
+    _assert_same(a, ref.orderBy("symbol", "datetime").toPandas())
+
+
+def _kernel_grouping(df) -> list[str]:
+    """Grouping attribute names of the plan's one Python kernel node,
+    read from the structured physical plan."""
+    nodes, found = [df._jdf.queryExecution().executedPlan()], []
+    while nodes:
+        node = nodes.pop()
+        if node.getClass().getSimpleName() == "FlatMapGroupsInPandasExec":
+            found.append([a.name() for a in _seq(node.groupingAttributes())])
+        nodes.extend(_plan_children(node))
+    assert len(found) == 1, found
+    return found[0]
+
+
+def test_route_cutoff_picks_layout(spark, bars_df, monkeypatch):
+    """The size probe routes on average rows per symbol: at the default
+    cutoff the 80-rows-per-symbol frame plans one group per symbol;
+    with the cutoff below that it plans the chunked layout, which
+    groups on (symbol, _blk). Both return the same rows and values."""
+    arrow = compute_all_features(bars_df, target_horizon=1)
+    assert _kernel_grouping(arrow) == ["symbol"]
+    monkeypatch.setattr(arrow_engine, "CHUNKED_ROWS_PER_SYMBOL", 79)
+    chunked = compute_all_features(bars_df, target_horizon=1)
+    assert _kernel_grouping(chunked) == ["symbol", "_blk"]
+    _assert_same(
+        arrow.orderBy("symbol", "datetime").toPandas(),
+        chunked.orderBy("symbol", "datetime").toPandas(),
+        atol=1e-12,
+    )
 
 
 def test_chunked_engine_matches_arrow(spark):
@@ -58,8 +112,8 @@ def test_chunked_engine_matches_arrow(spark):
     )
 
     a = (
-        compute_all_features(
-            df, engine="arrow", order_cols=("datetime", "bar_id"), target_horizon=1
+        compute_all_features_arrow(
+            df, order_cols=("datetime", "bar_id"), target_horizon=1
         )
         .orderBy("datetime")
         .toPandas()
@@ -90,14 +144,14 @@ def test_chunked_engine_matches_arrow(spark):
 
 
 def test_arrow_engine_column_contract(spark, bars_df):
-    out = compute_all_features(bars_df, engine="arrow", target_horizon=1)
+    out = compute_all_features_arrow(bars_df, target_horizon=1)
     assert len(out.columns) == 57  # reference's 56 + symbol (SURVEY.md §2.8)
     assert "target" in out.columns and dict(out.dtypes)["target"] == "tinyint"
 
 
 def test_arrow_engine_regression_target(spark, bars_df):
-    out = compute_all_features(
-        bars_df, engine="arrow", target_horizon=3, target_type="regression"
+    out = compute_all_features_arrow(
+        bars_df, target_horizon=3, target_type="regression"
     )
     assert dict(out.dtypes)["target"] == "double"
     n_syms = bars_df.select("symbol").distinct().count()
@@ -135,8 +189,8 @@ def test_chunked_engine_multi_symbol_boundaries(spark):
     )
 
     a = (
-        compute_all_features(
-            df, engine="arrow", order_cols=("datetime", "bar_id"), target_horizon=1
+        compute_all_features_arrow(
+            df, order_cols=("datetime", "bar_id"), target_horizon=1
         )
         .orderBy("symbol", "datetime")
         .toPandas()
@@ -207,7 +261,7 @@ def test_chunked_engine_randomized_shapes(spark):
         df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
         kwargs = dict(order_cols=("datetime", "bar_id"), target_horizon=fwd)
         a = (
-            compute_all_features(df, engine="arrow", **kwargs)
+            compute_all_features_arrow(df, **kwargs)
             .orderBy("symbol", "bar_id")
             .toPandas()
         )
@@ -236,10 +290,7 @@ def test_arrow_engine_rows_per_task_cap(spark, bars_df):
     groupBy exchange so AQE coalescing stays available."""
     import re
 
-    from marketdatapipeline_spark.features.arrow_engine import (
-        TARGET_ROWS_PER_TASK,
-        compute_all_features_arrow,
-    )
+    from marketdatapipeline_spark.features.arrow_engine import TARGET_ROWS_PER_TASK
 
     kwargs = dict(order_cols=("datetime",))
 

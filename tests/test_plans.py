@@ -68,13 +68,13 @@ def test_star_join_broadcasts_dimensions(spark):
 
 
 def test_feature_pipeline_single_symbol_exchange(spark, bars_df):
-    """The 50-feature pipeline must cost ONE hash exchange on symbol:
-    every window stage reuses the same partitioning. A second
+    """The per-family feature chain must cost ONE hash exchange on
+    symbol: every window stage reuses the same partitioning. A second
     hashpartitioning(symbol) exchange means a window spec stopped
     aligning with the established distribution."""
-    from marketdatapipeline_spark.features import compute_all_features
+    from tests.test_engines import reference_features
 
-    out = compute_all_features(bars_df, target_horizon=1, engine="sql")
+    out = reference_features(bars_df)
     plan = _plan(out)
     assert plan.count("hashpartitioning(symbol") <= 1, plan[:2000]
 

@@ -3,7 +3,7 @@
 Long-lived local JVMs showed run-to-run drift (GC/worker accumulation),
 so comparative engine measurements must each start clean:
 
-    python tools/bench_variant.py {scan|identity|arrow|sql|arrow_cached|sql_cached} [runs]
+    python tools/bench_variant.py {scan|identity|arrow|arrow_cached} [runs]
 """
 
 from __future__ import annotations
@@ -38,9 +38,9 @@ def main() -> None:
         out = bars
     elif variant == "identity":
         out = bars.groupBy("symbol").applyInPandas(lambda p: p, schema=bars.schema)
-    elif variant in ("arrow", "sql"):
+    elif variant == "arrow":
         out = compute_all_features(
-            bars, order_cols=("datetime", "bar_id"), target_horizon=1, engine=variant
+            bars, order_cols=("datetime", "bar_id"), target_horizon=1
         )
     else:
         raise SystemExit(f"unknown variant {variant}")
