@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 
 from marketdatapipeline_spark.features import arrow_engine
 from marketdatapipeline_spark.features.ewm import add_technical_ewm_features_native
-from marketdatapipeline_spark.features.windows import (
-    RollingPlan,
-    rolling_mean,
-    rolling_std,
-    rolling_sum,
-)
+from marketdatapipeline_spark.features.windows import RollingPlan
 
 EPS = 1e-10
 #: Reference uses this literal, not math.pi (engineering.py:187-192).
@@ -101,33 +96,6 @@ def _bollinger_outputs(
     }
 
 
-def momentum_expressions(
-    periods: tuple[int, ...],
-    w: WindowSpec,
-    close: Column = None,
-) -> dict[str, Column]:
-    """return/momentum/roc/sma/distance_sma per period
-    (reference engineering.py:73-117), as self-contained expressions.
-
-    Prefer :func:`compute_momentum_features` in pipelines — it
-    materializes each window primitive once (Catalyst does NOT
-    deduplicate repeated window expressions, so the inline form
-    evaluates every ``lag``/``avg`` several times per period).
-    """
-    close = close if close is not None else F.col("close")
-    exprs: dict[str, Column] = {}
-    for p in periods:
-        shifted = F.lag(close, p).over(w)
-        ret = (close - shifted) / (shifted + F.lit(EPS))
-        sma = rolling_mean(close, p, w)
-        exprs[f"return_{p}"] = ret
-        exprs[f"momentum_{p}"] = close - shifted
-        exprs[f"roc_{p}"] = ret * 100
-        exprs[f"sma_{p}"] = sma
-        exprs[f"distance_sma_{p}"] = (close - sma) / (sma + F.lit(EPS)) * 100
-    return exprs
-
-
 def _momentum_offsets(periods: tuple[int, ...], w: WindowSpec) -> dict[str, Column]:
     close = F.col("close")
     return {f"_lag_close_{p}": F.lag(close, p).over(w) for p in periods}
@@ -164,29 +132,6 @@ def compute_momentum_features(
     offsets = _momentum_offsets(periods, w)
     outputs = _momentum_outputs(periods, plan)
     return plan.apply(df.withColumns(offsets), outputs).drop(*offsets.keys())
-
-
-def volatility_expressions(
-    windows: tuple[int, ...],
-    w: WindowSpec,
-    has_hl: bool,
-) -> dict[str, Column]:
-    """returns + volatility/realized_vol/hl_range per window
-    (reference engineering.py:120-157), as self-contained expressions.
-    ``returns`` is pct_change: (x - lag x) / lag x, NULL on each
-    symbol's first row. Prefer :func:`compute_volatility_features`
-    in pipelines (single evaluation per window primitive)."""
-    close = F.col("close")
-    prev = F.lag(close, 1).over(w)
-    returns = (close - prev) / prev
-    exprs: dict[str, Column] = {"returns": returns}
-    for n in windows:
-        exprs[f"volatility_{n}"] = rolling_std(returns, n, w)
-        exprs[f"realized_vol_{n}"] = rolling_sum(F.pow(returns, 2), n, w)
-        if has_hl:
-            hl = (F.col("high") - F.col("low")) / close
-            exprs[f"hl_range_{n}"] = rolling_mean(hl, n, w)
-    return exprs
 
 
 def _volatility_outputs(

@@ -154,7 +154,7 @@ def fetch_intraday_data(
     if save:
         path = get_raw_data_path(data_dir, symbol, interval)
         save_dataframe(df, path)
-        logger.info("saved %s rows for %s to %s", df.count(), symbol, path)
+        logger.info("saved %s to %s", symbol, path)
     return df
 
 

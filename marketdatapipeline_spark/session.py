@@ -56,10 +56,11 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Measured on this container (tools/bench_variant.py): a 48g
-        # ParallelGC/-Xmn16g heap degrades run-over-run (2s -> 16s -> 80s
-        # within one JVM — old-gen fill + full-GC thrash), while a 12g
-        # G1 heap holds a flat ~2s steady state. Spark's heavy lifting
+        # Measured over repeated headline runs (tools/measure.py profile
+        # headline --reps N): a 48g ParallelGC/-Xmn16g heap degrades
+        # run-over-run (2s -> 16s -> 80s within one JVM — old-gen fill +
+        # full-GC thrash), while a 12g G1 heap holds a flat ~2s steady
+        # state. Spark's heavy lifting
         # (shuffle, sort, window buffers) spills to disk by design; a
         # big heap just postpones collection until it's catastrophic.
         .config("spark.driver.memory", os.getenv("MDP_DRIVER_MEMORY", "12g"))

@@ -142,3 +142,33 @@ def test_rate_limit_error_raised_when_retries_exhaust(spark):
             save=False,
             _sleep=lambda s: None,
         )
+
+
+def test_saved_fetch_runs_only_the_write_jobs(spark, tmp_path):
+    """``save=True`` adds the parquet write's jobs and nothing else; the
+    ingest plan does not run a second time."""
+    from marketdatapipeline_spark.data.storage import save_dataframe
+
+    sc = spark.sparkContext
+    pdf = _raw_alpha_vantage_pdf()
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            result = action()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    def fetch(save, data_dir):
+        return fetch_intraday_data(
+            spark, "AAPL", fetcher=lambda *_: pdf, data_dir=str(data_dir),
+            save=save, use_cache=False,
+        )
+
+    saved, _ = jobs("ingest-save", lambda: fetch(True, tmp_path / "saved"))
+    unsaved, df = jobs("ingest-nosave", lambda: fetch(False, tmp_path / "unsaved"))
+    written, _ = jobs("ingest-write", lambda: save_dataframe(df, str(tmp_path / "written")))
+    assert written >= 1
+    assert saved == unsaved + written
