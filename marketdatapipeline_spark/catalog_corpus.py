@@ -2976,10 +2976,10 @@ def q_bars_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bit-identical cross-engine), the rolling mean rides exact
     decimal(28,14) prefix-difference sums — the oracle's direct frame
     sum matches the prefix diff bit-for-bit because decimal addition
-    is exact. The Wilder-smoothed variant shares the blocked-EWM scan
-    and is pinned by pandas parity (tests/test_indicators.py), not by
-    this oracle — a 100k-deep exponential recursion has no
-    association-free SQL form."""
+    is exact. The Wilder-smoothed variant rides the EWMA scan
+    (features/ewm.py:add_ewm_native) and is pinned by pandas parity
+    (tests/test_indicators.py), not by this oracle — a 100k-deep
+    exponential recursion has no association-free SQL form."""
     bars = _bars_from_events_r8(spark, sf_dir)
     out = atr(bars, window=14, method="sma")
     return out.select(

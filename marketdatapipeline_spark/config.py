@@ -62,7 +62,6 @@ class PipelineConfig:
 
     # --- Spark tuning ---
     shuffle_partitions: int = 32
-    ewm_block_size: int = 100_000  # rows/block for the distributed EWMA scan
     #: train splits larger than this skip the reference-exact driver
     #: collect and fit distributed (ml/distributed.py). The default
     #: keeps reference-scale runs on the reference-exact path; a

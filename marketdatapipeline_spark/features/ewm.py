@@ -2,35 +2,22 @@
 
 Spark has no native EWMA window function (the recurrence
 ``y_t = (1-a)*y_{t-1} + a*x_t`` is a scan, not a frame aggregate), so
-this module provides two strategies:
+this module provides one distributed scan and one reference:
 
-**"pandas"** (default, exact): one ``applyInPandas`` per symbol using
-``pandas.Series.ewm`` — matches the reference's Polars ``ewm_mean``
-for both ``adjust`` modes (reference src/features/engineering.py:42-52).
-Requires each symbol's full series in one task; the right answer when
-symbol cardinality is high relative to per-symbol history (the common
-market-data shape: thousands of symbols, bounded history each).
+**``add_ewm_native``** (the scan): an all-JVM O(n) pass of chained
+window functions over fixed-length blocks of each symbol's series,
+with the block carry read by ``lag``. It backs RSI/MACD
+(``add_technical_ewm_features_native``), Heikin-Ashi and the Wilder
+ATR. The blocks keep the renormalized weights ``r^(-off)`` finite;
+each symbol is still one window partition, so its history sits in one
+task.
 
-**"blocked"** (scale path, ``ewm_mean_blocked``): a distributed
-two-level scan that never materializes a whole symbol in one task.
-The EWMA recurrence is linear, so with the series split into blocks,
-global prefix states are block-local states plus a geometrically
-discounted carry:
-
-    N_t = N_local_t + r^(k_t) * N_carry        (r = 1-a, k_t = offset in block)
-    D_t = D_local_t + r^(k_t) * D_carry
-
-    adjust=True :  y_t = N_t / D_t
-    adjust=False:  y_t = a*N_t + r^(t) * (1-a) * x_first   (t = 0-based global row)
-
-Stage 1 computes block-local prefix sums in parallel; stage 2 combines
-the tiny per-block summaries sequentially per symbol; stage 3
-broadcast-joins the carries back. Cost: one shuffle + one broadcast
-join, sequential work only over ``n_blocks`` rows — survives a
-single-symbol history of any length, where the pandas path OOMs one
-task. Values agree with the pandas path to FP rounding (different
-association order), so the exact path backs the DuckDB oracle and the
-blocked path backs 100 TB scale.
+**``add_technical_ewm_features``** (the reference): one
+``applyInPandas`` per symbol using ``pandas.Series.ewm`` — matches the
+reference's Polars ``ewm_mean`` for both ``adjust`` modes (reference
+src/features/engineering.py:42-52). Tests and the ``ewm_indicators``
+catalog query check the scan against it; the two agree to FP rounding
+(different association order).
 """
 
 from __future__ import annotations
@@ -227,6 +214,16 @@ def add_ewm_native(
     Reference semantics: src/features/engineering.py:42-52 (RSI
     adjust=False, MACD adjust=True).
     """
+    # span 1 (a = 1) makes the average its own input in both modes; the
+    # block weights r^(-off) below would divide by r = 0
+    unit = {
+        c: F.col(x).cast("double") for c, (x, span, _adj) in specs.items() if span == 1
+    }
+    if unit:
+        df = df.withColumns(unit)
+        specs = {c: v for c, v in specs.items() if c not in unit}
+        if not specs:
+            return df
     if block_size is None:
         block_size = ewm_block_size(span for _, span, _adj in specs.values())
     B = block_size
@@ -379,102 +376,3 @@ def add_technical_ewm_features_native(
             "macd_histogram": F.col("macd") - F.col("_sig"),
         }
     ).drop("_gain", "_loss", "_ema_fast", "_ema_slow", "_avg_gain", "_avg_loss", "_sig")
-
-
-def ewm_mean_blocked(
-    df: DataFrame,
-    col: str,
-    span: int,
-    out_col: str,
-    adjust: bool = True,
-    symbol_col: str = "symbol",
-    order_cols: tuple[str, ...] = ("datetime",),
-    block_size: int = 100_000,
-) -> DataFrame:
-    """Distributed exact EWMA via a block-parallel linear-recurrence scan.
-
-    Assumes ``col`` is non-null (true for prices). ``r**k`` underflows
-    gradually to 0.0 for large k (r < 1), which is exactly the right
-    limit — a carry more than ~40/a rows back contributes < 1 ulp — so
-    there is no overflow path.
-    """
-    a = 2.0 / (span + 1.0)
-    r = 1.0 - a
-    order = [F.col(c) for c in order_cols]
-    w = Window.partitionBy(symbol_col).orderBy(*order)
-    d = df.withColumn("_rn", F.row_number().over(w))
-    d = d.withColumn("_blk", ((F.col("_rn") - 1) / F.lit(block_size)).cast("long"))
-    if not adjust:
-        d = d.withColumn(
-            "_x0",
-            F.first(col).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-        )
-
-    def local_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn")
-        x = pdf[col].to_numpy("float64")
-        n = len(x)
-        num = np.empty(n)
-        den = np.empty(n)
-        acc_n, acc_d = 0.0, 0.0
-        for i in range(n):
-            acc_n = r * acc_n + x[i]
-            acc_d = r * acc_d + 1.0
-            num[i] = acc_n
-            den[i] = acc_d
-        return pdf.assign(_num=num, _den=den, _off=np.arange(1, n + 1, dtype="float64"))
-
-    scan_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in d.schema.fields]
-        + ["_num double", "_den double", "_off double"]
-    )
-    scanned = d.groupBy(symbol_col, "_blk").applyInPandas(local_scan, schema=scan_schema)
-
-    block_ends = (
-        scanned.groupBy(symbol_col, "_blk")
-        .agg(F.count("*").alias("_cnt"), F.max(F.struct("_rn", "_num", "_den")).alias("_e"))
-        .select(
-            symbol_col,
-            "_blk",
-            "_cnt",
-            F.col("_e._num").alias("_n_end"),
-            F.col("_e._den").alias("_d_end"),
-        )
-    )
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_blk")
-        carry_n, carry_d = 0.0, 0.0
-        outs_n, outs_d = [], []
-        for cnt, n_end, d_end in zip(pdf["_cnt"], pdf["_n_end"], pdf["_d_end"]):
-            outs_n.append(carry_n)
-            outs_d.append(carry_d)
-            f = r ** float(cnt)
-            carry_n = n_end + f * carry_n
-            carry_d = d_end + f * carry_d
-        return pdf.assign(_carry_n=outs_n, _carry_d=outs_d)
-
-    sym_type = dict(zip(block_ends.columns, [f.dataType.simpleString() for f in block_ends.schema.fields]))[symbol_col]
-    carry_schema = (
-        f"`{symbol_col}` {sym_type}, _blk long, _cnt long, _n_end double, "
-        "_d_end double, _carry_n double, _carry_d double"
-    )
-    carries = block_ends.groupBy(symbol_col).applyInPandas(combine, schema=carry_schema)
-
-    joined = scanned.join(
-        F.broadcast(carries.select(symbol_col, "_blk", "_carry_n", "_carry_d")),
-        on=[symbol_col, "_blk"],
-    )
-    factor = F.pow(F.lit(r), F.col("_off"))
-    num = F.col("_num") + factor * F.col("_carry_n")
-    if adjust:
-        den = F.col("_den") + factor * F.col("_carry_d")
-        ewm = num / den
-        drop = ["_rn", "_blk", "_num", "_den", "_off", "_carry_n", "_carry_d"]
-    else:
-        # y_t = a * N_t + r^t * (1-a) * x_first  (t = _rn - 1, 0-based):
-        # expanding pandas' seed y_0 = x_0 through the recursion leaves
-        # the a-weighted prefix sum plus a decaying seed correction.
-        ewm = F.lit(a) * num + F.pow(F.lit(r), F.col("_rn") - 1) * F.lit(1.0 - a) * F.col("_x0")
-        drop = ["_rn", "_blk", "_num", "_den", "_off", "_carry_n", "_carry_d", "_x0"]
-    return joined.withColumn(out_col, ewm).drop(*drop)

@@ -103,13 +103,17 @@ def _alpha_vantage_fetcher(api_key: str, daily: bool = False) -> Fetcher:
 
 
 def _ingest_pandas(spark: SparkSession, pdf: pd.DataFrame, symbol: str) -> DataFrame:
-    """pandas → conformed, sorted OHLCV DataFrame (Arrow boundary S15)."""
+    """pandas → conformed, sorted OHLCV DataFrame (Arrow boundary S15).
+
+    The input is one driver-side frame, so it is sorted inside a single
+    partition: a global ``orderBy`` would add a sampling job and a range
+    exchange to every action on the bars."""
     if pdf is None or len(pdf) == 0:
         raise ValueError(f"empty response for {symbol}")
     if pdf.index.name is not None or not isinstance(pdf.index, pd.RangeIndex):
         pdf = pdf.reset_index()
     df = spark.createDataFrame(pdf)
-    return conform_to_ohlcv(df, symbol=symbol).orderBy("datetime")
+    return conform_to_ohlcv(df, symbol=symbol).coalesce(1).sortWithinPartitions("datetime")
 
 
 def fetch_intraday_data(

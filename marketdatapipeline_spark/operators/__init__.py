@@ -33,7 +33,7 @@ of DataFrame primitives (never driver loops, never cross products):
 - :func:`event_study` — join-free aligned return curve around
   detected events (lag-fan-out, never a range join);
 - :func:`heikin_ashi` — smoothed candles; the ha_open recursion IS
-  an alpha-0.5 EWMA, riding the block-parallel scan;
+  an alpha-0.5 EWMA, riding the all-JVM EWMA scan;
 - :func:`funnel` / :func:`cohort_retention` — product analytics over
   event streams: strictly-sequential first-touch funnels (array
   algebra, no per-step self-joins) and retention triangles;

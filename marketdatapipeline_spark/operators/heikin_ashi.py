@@ -6,17 +6,15 @@ seeded ``(o_1+c_1)/2``. The trick that keeps this distributed: the
 recursion is EXACTLY an EWMA — ``y_t = 0.5 y_{t-1} + 0.5 x_t`` with
 ``x_1 = (o_1+c_1)/2`` (the seed) and ``x_t = ha_close_{t-1}``
 after — i.e. ``ewm(alpha=0.5, adjust=False)`` over a shifted input,
-and alpha 0.5 is span 3. So ha_open rides the repo's block-parallel
-linear-recurrence scan (features/ewm.py:ewm_mean_blocked): O(blocks)
-sequential work, unbounded per-symbol history safe — no per-symbol
-pandas scan, no driver loop.
+and alpha 0.5 is span 3. So ha_open rides the repo's one EWMA scan
+(features/ewm.py:add_ewm_native): all-JVM window functions, one
+exchange by symbol, no per-symbol pandas scan, no driver loop.
 
-Geometric decay means a block boundary's carry is bit-associated
-slightly differently from a single sequential scan; parity vs the
-literal pandas recursion is pinned at ~1e-12 relative
-(tests/test_randomized_market.py), the same contract as the Wilder
-ATR twin. No SQL oracle (recursion has no bounded-depth SQL form at
-100k rows — the ewm_indicators precedent).
+The blocked scan associates the sum differently from a single
+sequential loop; parity vs the literal pandas recursion is pinned at
+~1e-11 relative (tests/test_randomized_market.py, and across block
+boundaries tests/test_ewm.py), the same contract as the Wilder ATR. No SQL oracle (recursion has no bounded-depth
+SQL form at 100k rows — the ewm_indicators precedent).
 """
 
 from __future__ import annotations
@@ -31,13 +29,12 @@ def heikin_ashi(
     df: DataFrame,
     symbol_col: str = "symbol",
     order_cols: tuple[str, ...] = ("datetime", "bar_id"),
-    block_size: int = 100_000,
 ) -> DataFrame:
     """Add ``ha_open``, ``ha_high``, ``ha_low``, ``ha_close``.
 
     ``ha_high = max(high, ha_open, ha_close)`` and ``ha_low``
     symmetrically — per-row picks over the recursive open."""
-    from marketdatapipeline_spark.features.ewm import ewm_mean_blocked
+    from marketdatapipeline_spark.features.ewm import add_ewm_native
 
     w = Window.partitionBy(symbol_col).orderBy(*order_cols)
     hc = (
@@ -47,15 +44,12 @@ def heikin_ashi(
     staged = df.withColumn("_hac", hc).withColumn(
         "_x", F.coalesce(F.lag(F.col("_hac")).over(w), seed)
     )
-    out = ewm_mean_blocked(
+    out = add_ewm_native(
         staged,
-        "_x",
-        span=3,  # alpha = 2/(span+1) = 0.5 — THE Heikin-Ashi recursion
-        out_col="ha_open",
-        adjust=False,
+        # alpha = 2/(span+1) = 0.5 — THE Heikin-Ashi recursion
+        {"ha_open": ("_x", 3, False)},
         symbol_col=symbol_col,
         order_cols=order_cols,
-        block_size=block_size,
     )
     return (
         out.withColumn("ha_close", F.col("_hac"))

@@ -20,8 +20,8 @@ Cross-engine exactness conventions (the repo's vwap/ohlc_vol rules):
 - Pure picks and integer cumsums (Donchian bands, OBV) are exact and
   are emitted UNROUNDED.
 - Wilder-smoothed ATR is an exponential recursion with no
-  association-free SQL form at depth 100k; it reuses the blocked EWM
-  scan (features/ewm.py:387) and is pinned by randomized pandas
+  association-free SQL form at depth 100k; it reuses the EWMA scan
+  (features/ewm.py:add_ewm_native) and is pinned by randomized pandas
   parity instead of a DuckDB oracle (same split as ewm_indicators).
 """
 
@@ -116,7 +116,6 @@ def atr(
     symbol_col: str = "symbol",
     order_cols: tuple[str, ...] = ("datetime", "bar_id"),
     out_col: str = "atr",
-    block_size: int = 100_000,
 ) -> DataFrame:
     """Average true range over ``window`` bars.
 
@@ -124,11 +123,10 @@ def atr(
     with Wilder's recursion ``atr_t = atr_{t-1} + (tr_t - atr_{t-1})
     / n`` — an EWM with alpha = 1/n, adjust=False, seeded with the
     first true range (the pandas ``ewm(alpha=1/n, adjust=False)``
-    convention). It rides the distributed blocked EWM scan
-    (features/ewm.py:387) via the span identity span = 2n - 1
-    (alpha = 2/(span+1) = 1/n), so the plan is the same
-    block-parallel linear recurrence the MACD/RSI path uses — no
-    per-symbol sequential history scan.
+    convention). It rides the all-JVM EWMA scan
+    (features/ewm.py:add_ewm_native) via the span identity
+    span = 2n - 1 (alpha = 2/(span+1) = 1/n), the same scan the
+    MACD/RSI path uses: one exchange by symbol and no Python worker.
 
     ``method="sma"`` is the simple-moving-average variant (null until
     the frame fills): one window exchange with exact decimal prefix
@@ -142,17 +140,13 @@ def atr(
         return out.drop("_tr")
     if method != "wilder":
         raise ValueError(f"unknown ATR method: {method!r}")
-    from marketdatapipeline_spark.features.ewm import ewm_mean_blocked
+    from marketdatapipeline_spark.features.ewm import add_ewm_native
 
-    out = ewm_mean_blocked(
+    out = add_ewm_native(
         d,
-        "_tr",
-        span=2 * window - 1,
-        out_col=out_col,
-        adjust=False,
+        {out_col: ("_tr", 2 * window - 1, False)},
         symbol_col=symbol_col,
         order_cols=order_cols,
-        block_size=block_size,
     )
     return out.drop("_tr")
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from marketdatapipeline_spark.session import active_or
 
-__all__ = ["higher_order_functions"]
+__all__ = ["higher_order_functions", "plan_nodes"]
 
 #: Catalyst's marker trait for lambda-taking expressions (``transform``,
 #: ``aggregate``, ``filter``, ``exists``, ``zip_with``, ``map_filter``,
@@ -45,24 +45,26 @@ def _plan_children(node) -> list:
     return _seq(node.children()) + _seq(node.subqueries())
 
 
-def higher_order_functions(
+def _query_execution(query: DataFrame | JavaObject, spark: SparkSession | None):
+    if isinstance(query, DataFrame):
+        return query.sparkSession, query._jdf.queryExecution()
+    return active_or(spark), query
+
+
+def plan_nodes(
     query: DataFrame | JavaObject, spark: SparkSession | None = None
-) -> list[str]:
-    """The distinct higher-order-function expressions anywhere in the
-    physical plan of ``query``: a DataFrame (its
+) -> list[JavaObject]:
+    """Every physical operator in the plan of ``query``: a DataFrame (its
     ``queryExecution.executedPlan``; run an action first to walk the
     finalized adaptive plan) or a JVM ``QueryExecution`` as a
     ``QueryExecutionListener`` receives it (``spark`` names its
-    session; default the active one). Each entry is the expression's
-    rendering, lambda variable ids included, so the same expression
-    reached through two paths counts once."""
-    if isinstance(query, DataFrame):
-        spark, qe = query.sparkSession, query._jdf.queryExecution()
-    else:
-        spark, qe = active_or(spark), query
-    gateway = spark.sparkContext._gateway
-    identity = gateway.jvm.java.lang.System.identityHashCode
-    found: set[str] = set()
+    session; default the active one). Wrappers the descent passes
+    through (adaptive plan, query stages, in-memory scans, command
+    results) are included; an operator reached through two paths
+    counts once."""
+    spark, qe = _query_execution(query, spark)
+    identity = spark.sparkContext._gateway.jvm.java.lang.System.identityHashCode
+    out: list[JavaObject] = []
     seen: set[int] = set()
     nodes = [qe.executedPlan()]
     while nodes:
@@ -71,11 +73,26 @@ def higher_order_functions(
         if key in seen:
             continue
         seen.add(key)
+        out.append(node)
+        nodes.extend(_plan_children(node))
+    return out
+
+
+def higher_order_functions(
+    query: DataFrame | JavaObject, spark: SparkSession | None = None
+) -> list[str]:
+    """The distinct higher-order-function expressions anywhere in the
+    physical plan of ``query`` (any :func:`plan_nodes` input). Each
+    entry is the expression's rendering, lambda variable ids included,
+    so the same expression reached through two paths counts once."""
+    spark, qe = _query_execution(query, spark)
+    gateway = spark.sparkContext._gateway
+    found: set[str] = set()
+    for node in plan_nodes(qe, spark):
         exprs = _seq(node.expressions())
         while exprs:
             e = exprs.pop()
             if is_instance_of(gateway, e, HIGHER_ORDER_FUNCTION):
                 found.add(e.toString())
             exprs.extend(_seq(e.children()))
-        nodes.extend(_plan_children(node))
     return sorted(found)

@@ -1,7 +1,7 @@
 """Online (incremental) average true range with explicit state.
 
 Streaming counterpart of ``operators/indicators.py:atr`` (Wilder
-smoothing): the batch path rides the blocked EWM scan over full
+smoothing): the batch path rides the all-JVM EWMA scan over full
 histories; this operator carries a **3-field state vector per symbol**
 (row count, last close, running ATR) across micro-batches via
 ``applyInPandasWithState`` — O(symbols) state for an unbounded feed,
@@ -22,9 +22,9 @@ range degrades to ``|p - prev_p|``, the tick-to-tick range).
 
 Parity: the stream and ``online_atr_batch`` share ``_scan_hlc``
 verbatim, so stream == batch-twin is bit-exact (structural, pinned in
-tests/test_streaming.py); the batch twin tracks the blocked-EWM
-``atr(method="wilder")`` to ~1e-12 relative (same recurrence, block-
-parallel FP association).
+tests/test_streaming.py); the batch twin tracks the EWMA-scan
+``atr(method="wilder")`` to ~1e-12 relative (same recurrence, blocked
+FP association).
 """
 
 from __future__ import annotations

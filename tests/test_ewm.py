@@ -1,4 +1,5 @@
-"""EWMA exactness: pandas path (oracle-exact) and blocked scale path.
+"""EWMA exactness: the pandas reference (oracle-exact) and the all-JVM
+scan ``add_ewm_native`` with the operators built on it.
 
 Reference semantics (src/features/engineering.py:36-57): RSI uses
 ``ewm(span=14, adjust=False)``; MACD EMAs use ``adjust=True`` (default).
@@ -10,10 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from marketdatapipeline_spark.features.ewm import (
-    add_technical_ewm_features,
-    ewm_mean_blocked,
-)
+from marketdatapipeline_spark.features.ewm import add_technical_ewm_features
 
 EPS = 1e-10
 
@@ -95,14 +93,20 @@ def test_native_ewm_multiblock(spark):
     df = spark.createDataFrame(pdf)
     out = add_ewm_native(
         df,
-        {"e_t": ("close", 5, True), "e_f": ("close", 5, False)},
+        {
+            "e_t": ("close", 5, True),
+            "e_f": ("close", 5, False),
+            "e_1": ("close", 1, False),  # Wilder ATR with window=1
+        },
         order_cols=("datetime",),
     )
     got = out.orderBy("datetime").toPandas()
     exp_t = pdf["close"].ewm(span=5).mean().to_numpy()
     exp_f = pdf["close"].ewm(span=5, adjust=False).mean().to_numpy()
+    exp_1 = pdf["close"].ewm(span=1, adjust=False).mean().to_numpy()
     assert np.allclose(got["e_t"].to_numpy("float64"), exp_t, rtol=1e-9, atol=1e-9)
     assert np.allclose(got["e_f"].to_numpy("float64"), exp_f, rtol=1e-9, atol=1e-9)
+    assert np.allclose(got["e_1"].to_numpy("float64"), exp_1, rtol=1e-9, atol=1e-9)
 
 
 def test_native_ewm_long_span(spark):
@@ -134,34 +138,6 @@ def test_native_ewm_long_span(spark):
     # incompatible span mix (ratio > ~13) must raise, not silently err
     with pytest.raises(ValueError, match="block size"):
         ewm_block_size([5, 1000])
-
-
-def test_blocked_ewm_adjust_true_matches_pandas(spark, bars_df, bars_pdf):
-    out = ewm_mean_blocked(
-        bars_df, "close", span=12, out_col="e", adjust=True, block_size=17
-    )
-    got = out.orderBy("symbol", "datetime").toPandas()["e"].to_numpy("float64")
-    exp = (
-        bars_pdf.sort_values(["symbol", "datetime"])
-        .groupby("symbol", sort=True)["close"]
-        .apply(lambda s: s.ewm(span=12).mean())
-        .to_numpy()
-    )
-    assert np.allclose(got, exp, rtol=1e-12, atol=1e-12)
-
-
-def test_blocked_ewm_adjust_false_matches_pandas(spark, bars_df, bars_pdf):
-    out = ewm_mean_blocked(
-        bars_df, "close", span=14, out_col="e", adjust=False, block_size=13
-    )
-    got = out.orderBy("symbol", "datetime").toPandas()["e"].to_numpy("float64")
-    exp = (
-        bars_pdf.sort_values(["symbol", "datetime"])
-        .groupby("symbol", sort=True)["close"]
-        .apply(lambda s: s.ewm(span=14, adjust=False).mean())
-        .to_numpy()
-    )
-    assert np.allclose(got, exp, rtol=1e-12, atol=1e-12)
 
 
 def test_native_ewm_random_data_with_varied_partition_sizes(spark):
@@ -206,3 +182,70 @@ def test_native_ewm_random_data_with_varied_partition_sizes(spark):
             atol=1e-9,
             equal_nan=True,
         ), c
+
+
+def test_heikin_ashi_and_wilder_atr_cross_blocks(spark):
+    """Heikin-Ashi (span 3) and Wilder ATR (n=14, span 27) on the native
+    scan == their literal pandas recursions, on series long enough
+    that the carry crosses block boundaries at both spans."""
+    from marketdatapipeline_spark.features.ewm import ewm_block_size
+    from marketdatapipeline_spark.operators.heikin_ashi import heikin_ashi
+    from marketdatapipeline_spark.operators.indicators import atr
+
+    n_atr = 14
+    rng = np.random.default_rng(8)
+    base = pd.Timestamp("2024-01-01")
+    frames, bar0 = [], 0
+    for sym, n in (("A", 1300), ("B", 1700)):
+        close = 100.0 + np.cumsum(rng.normal(0, 1, n))
+        frames.append(
+            pd.DataFrame(
+                {
+                    "symbol": sym,
+                    # duplicate-prone timestamps: bar_id breaks the ties
+                    "datetime": base
+                    + pd.to_timedelta(rng.integers(0, 2, n).cumsum(), "min"),
+                    "bar_id": np.arange(bar0, bar0 + n),
+                    "open": close + rng.normal(0, 0.1, n),
+                    "high": close + np.abs(rng.normal(0, 1, n)) + 0.01,
+                    "low": close - np.abs(rng.normal(0, 1, n)) - 0.01,
+                    "close": close,
+                }
+            )
+        )
+        bar0 += n
+    pdf = pd.concat(frames, ignore_index=True)
+    shortest = pdf.groupby("symbol").size().min()
+    for span in (3, 2 * n_atr - 1):
+        assert shortest > 2 * ewm_block_size([span]), span
+
+    df = spark.createDataFrame(pdf)
+    got = (
+        atr(heikin_ashi(df), window=n_atr)
+        .toPandas()
+        .sort_values("bar_id")
+        .reset_index(drop=True)
+    )
+    hao, want_atr = [], []
+    for _, g in pdf.groupby("symbol"):  # symbol order == bar_id order
+        o, h, low, c = (g[k].to_numpy() for k in ("open", "high", "low", "close"))
+        hac = (o + h + low + c) / 4.0
+        pc = np.concatenate([[np.nan], c[:-1]])
+        tr = np.where(
+            np.isnan(pc),
+            h - low,
+            np.maximum.reduce([h - low, np.abs(h - pc), np.abs(low - pc)]),
+        )
+        ho, a = np.empty(len(g)), np.empty(len(g))
+        ho[0], a[0] = (o[0] + c[0]) / 2.0, tr[0]
+        for k in range(1, len(g)):
+            ho[k] = (ho[k - 1] + hac[k - 1]) / 2.0
+            a[k] = a[k - 1] + (tr[k] - a[k - 1]) / n_atr
+        hao.append(ho)
+        want_atr.append(a)
+    np.testing.assert_allclose(
+        got["ha_open"].to_numpy(float), np.concatenate(hao), rtol=1e-11
+    )
+    np.testing.assert_allclose(
+        got["atr"].to_numpy(float), np.concatenate(want_atr), rtol=1e-9
+    )

@@ -38,9 +38,8 @@ def test_atr_wilder_random_parity(spark, seed):
 
     pdf = _random_bars(seed, n_symbols=4)
     n = 7
-    # block_size=16 forces cross-block carries through the blocked EWM
     got = (
-        atr(spark.createDataFrame(pdf), window=n, method="wilder", block_size=16)
+        atr(spark.createDataFrame(pdf), window=n, method="wilder")
         .toPandas()
         .sort_values("bar_id")
         .reset_index(drop=True)

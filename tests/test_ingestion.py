@@ -172,3 +172,21 @@ def test_saved_fetch_runs_only_the_write_jobs(spark, tmp_path):
     written, _ = jobs("ingest-write", lambda: save_dataframe(df, str(tmp_path / "written")))
     assert written >= 1
     assert saved == unsaved + written
+
+
+def test_saved_fetch_plan_has_no_shuffle(spark, tmp_path):
+    """The bars a saved fetch returns are sorted inside one partition,
+    so their executed plan holds no shuffle exchange (read from the
+    structured plan): a global sort would add a range exchange and a
+    sampling job to every action on them."""
+    from marketdatapipeline_spark.plan_checks import plan_nodes
+
+    pdf = _raw_alpha_vantage_pdf().sample(frac=1.0, random_state=3)
+    df = fetch_intraday_data(
+        spark, "AAPL", fetcher=lambda *_: pdf, data_dir=str(tmp_path),
+        save=True, use_cache=False,
+    )
+    got = [r.datetime for r in df.collect()]
+    assert got == sorted(got) and len(got) == len(pdf)
+    names = [n.getClass().getSimpleName() for n in plan_nodes(df)]
+    assert "ShuffleExchangeExec" not in names, names

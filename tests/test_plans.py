@@ -537,12 +537,14 @@ def test_indicator_wave_single_exchange(spark):
 def test_r8_second_wave_plan_shapes(spark):
     """The second r8 operator wave holds the one-exchange-per-symbol
     discipline: Williams+MFI chain, CCI, the full backtest, Corwin-
-    Schultz, and Heikin-Ashi each shuffle every bar exactly once and
-    never join; volume bars add only the (symbol, bucket) agg
-    exchange on top of the window's."""
+    Schultz, Heikin-Ashi and the Wilder ATR each shuffle every bar
+    exactly once and never shuffle-join (the EWMA scan's one join
+    broadcasts its small weight table); volume bars add only the
+    (symbol, bucket) agg exchange on top of the window's."""
     from marketdatapipeline_spark.operators.backtest import vector_backtest
     from marketdatapipeline_spark.operators.heikin_ashi import heikin_ashi
     from marketdatapipeline_spark.operators.indicators import (
+        atr,
         commodity_channel_index,
         money_flow_index,
         williams_r,
@@ -551,6 +553,7 @@ def test_r8_second_wave_plan_shapes(spark):
         corwin_schultz_spread,
     )
     from marketdatapipeline_spark.operators.volume_bars import volume_bars
+    from marketdatapipeline_spark.plan_checks import plan_nodes
     from marketdatapipeline_spark.sources.tables import bars_from_events
     from pyspark.sql import functions as F
 
@@ -566,11 +569,29 @@ def test_r8_second_wave_plan_shapes(spark):
         plan = _plan(out)
         assert plan.count("Exchange hashpartitioning") == 1, (name, plan)
         assert "CartesianProduct" not in plan, name
-    # heikin-ashi rides the blocked EWM scan: a bounded HANDFUL of
-    # exchanges (block carries), never per-row work or a cartesian
-    ha = _plan(heikin_ashi(bars))
-    assert ha.count("Exchange hashpartitioning") <= 6
-    assert "CartesianProduct" not in ha
+    # heikin-ashi and the Wilder ATR ride the all-JVM EWMA scan: its
+    # block carries are windows over the one symbol exchange, and no
+    # Python worker runs (read from the structured plan)
+    for name, out in (
+        ("heikin_ashi", heikin_ashi(bars)),
+        ("atr_wilder", atr(bars, window=14, method="wilder")),
+    ):
+        nodes = plan_nodes(out)
+        hashed = [
+            n for n in nodes
+            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            and n.outputPartitioning().getClass().getSimpleName()
+            == "HashPartitioning"
+        ]
+        python = [
+            n.getClass().getSimpleName() for n in nodes
+            if n.getClass().getName().startswith(
+                "org.apache.spark.sql.execution.python."
+            )
+        ]
+        assert len(hashed) == 1, (name, _plan(out))
+        assert python == [], (name, python)
+        assert "CartesianProduct" not in _plan(out), name
     vb = _plan(volume_bars(bars, bucket_size=50_000.0))
     assert vb.count("Exchange hashpartitioning") <= 2
     assert "Join" not in vb and "CartesianProduct" not in vb

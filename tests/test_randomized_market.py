@@ -807,7 +807,7 @@ def test_event_study_rejects_bad_k(spark):
 
 @pytest.mark.parametrize("seed", [61])
 def test_heikin_ashi_random_parity(spark, seed):
-    """The blocked-EWM restatement == the literal pandas recursion."""
+    """The EWMA-scan restatement == the literal pandas recursion."""
     from marketdatapipeline_spark.operators.heikin_ashi import heikin_ashi
 
     pdf = _random_bars(seed)

@@ -808,7 +808,7 @@ def test_online_atr_stream_matches_batch_twin(spark, bars_df, tick_dir):
 
 
 def test_online_atr_batch_twin_matches_blocked_ewm(spark, bars_df):
-    """The sequential recurrence == the blocked-EWM batch operator
+    """The sequential recurrence == the EWMA-scan batch operator
     (operators/indicators.py atr method='wilder') to FP-association
     tolerance — the stream's answer is the batch answer."""
     from marketdatapipeline_spark.operators.indicators import atr
@@ -823,8 +823,7 @@ def test_online_atr_batch_twin_matches_blocked_ewm(spark, bars_df):
         .reset_index(drop=True)
     )
     blocked = (
-        atr(bars_df, window=n, method="wilder", block_size=64,
-            order_cols=("datetime",))
+        atr(bars_df, window=n, method="wilder", order_cols=("datetime",))
         .toPandas()
         .sort_values(key)
         .reset_index(drop=True)
