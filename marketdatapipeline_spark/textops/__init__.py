@@ -69,6 +69,7 @@ from marketdatapipeline_spark.textops.dedup import (
     jaccard_pairs_with_lsh_flag,
     containment_similar_pairs,
     jaccard_similar_pairs,
+    lsh_band_keys,
     lsh_candidate_pairs,
     minhash_estimate_quality,
     minhash_near_duplicates,
@@ -120,6 +121,7 @@ __all__ = [
     "jaccard_pairs_with_lsh_flag",
     "containment_similar_pairs",
     "jaccard_similar_pairs",
+    "lsh_band_keys",
     "lsh_candidate_pairs",
     "export_training_shards",
     "read_training_shards",

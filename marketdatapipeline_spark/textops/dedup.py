@@ -26,6 +26,16 @@ Scale design (100 TB corpora):
   sharing a band collide, never all-pairs;
 - the Jaccard verifier joins candidate pairs back to shingle sets,
   so verification cost is proportional to candidates, not n^2.
+
+Each piece of the MinHash-LSH layer is written once, here, and shared
+by the operators below and by
+:class:`~marketdatapipeline_spark.textops.incremental.LSHDedupStore`:
+:func:`lsh_band_keys` (the band-key formula, which is also the store's
+persisted ``keys/`` format), ``_verified_pairs`` (the ``array_intersect``
+check of candidate pairs against collected shingle-hash sets) and
+``_cooccurrence_pairs`` (the exact ``_h`` self-join behind
+:func:`jaccard_similar_pairs`, :func:`jaccard_pairs_with_lsh_flag` and
+:func:`minhash_estimate_quality`).
 """
 
 from __future__ import annotations
@@ -186,89 +196,28 @@ def minhash_doc_table(
     )
 
 
-def jaccard_similar_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Document pairs with shingle-set Jaccard >= threshold.
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of the ``(id_a, id_b, inter, n_a, n_b)``
+    pair rows whose hashed-set Jaccard ``inter / (n_a + n_b - inter)``
+    is >= threshold."""
+    jaccard = F.col("inter") / (
+        F.col("n_a") + F.col("n_b") - F.col("inter")
+    ).cast("double")
+    return pairs.select("id_a", "id_b", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
 
-    Without ``candidates`` this self-joins the exploded shingle table —
-    cost bounded by shared-shingle co-occurrence, not n^2, but still
-    the exact path. Pass LSH candidates (``lsh_candidate_pairs``) to
-    verify only colliding pairs — the 100 TB path: each document's
-    shingle set is collected into ONE array row, so the verify step is
-    two equi-joins that attach a (doc-sized) array per pair side plus a
-    codegen ``array_intersect`` per pair — never a replication of the
-    pair list by per-doc shingle count, and never the co-occurrence
-    explosion. Pairs with an empty intersection are dropped (as the
-    co-occurrence join does implicitly), which is equivalent for any
-    ``threshold > 0``.
 
-    Both paths operate on the 32-bit shingle HASHES (hashed-set
-    Jaccard, as in minhash_near_duplicates): the distinct step, the
-    co-occurrence join, and the intersections all work on bigints
-    instead of multi-word strings, and the hashed table is persisted
-    for its multiple consumers. A 32-bit collision merging two
-    shingles is deterministic and reproduced exactly by the SQL
-    oracles.
-    """
-    sh = shingle_hashes(df, id_col, text_col, n)
-
-    if candidates is not None:
-        # One row per doc: the distinct shingle-hash set as an array +
-        # its size, from a single aggregation. The candidate pair list
-        # then picks up each side's set via a plain equi-join (AQE
-        # turns these into broadcast joins when the doc-set side is
-        # small); the intersection is a hash-set pass inside codegen.
-        # Persisted: pa and pb both read it.
-        sets_ = scoped_persist(
-            sh.groupBy(id_col).agg(
-                F.collect_list("_h").alias("_sh"), F.count("*").alias("n_sh")
-            )
-        )
-        pa = sets_.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_sh").alias("_sh_a"),
-            F.col("n_sh").alias("n_a"),
-        )
-        pb = sets_.select(
-            F.col(id_col).alias("id_b"),
-            F.col("_sh").alias("_sh_b"),
-            F.col("n_sh").alias("n_b"),
-        )
-        inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-        return (
-            candidates.join(pa, "id_a")
-            .join(pb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.col("n_a"),
-                F.col("n_b"),
-                inter.alias("inter"),
-            )
-            .filter(F.col("inter") > 0)
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double")
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    # Exact path: sh feeds three branches (sizes + both join sides).
-    sh = scoped_persist(sh)
+def _cooccurrence_pairs(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, inter, n_a, n_b), ``id_a < id_b``, for every pair of
+    documents sharing at least one shingle hash: the exact co-occurrence
+    self-join on ``_h`` over a (persisted) :func:`shingle_hashes` table,
+    which feeds the set sizes and both join sides. Cost is bounded by
+    shared-shingle co-occurrence, not n^2."""
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "_h")
     b = sh.select(F.col(id_col).alias("id_b"), "_h")
-    pairs = (
+    inter = (
         a.join(b, on="_h")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
@@ -276,19 +225,66 @@ def jaccard_similar_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def _verified_pairs(
+    candidates: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+    id_col: str,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of the candidate pairs whose hashed-set
+    Jaccard is >= threshold. ``sets_a`` and ``sets_b`` are
+    ``(id, _sh, n_sh)`` tables (one collected shingle-hash array per
+    document, :func:`minhash_doc_table`) that ``id_a`` and ``id_b`` join
+    to: two equi-joins attach a doc-sized array per pair side, then a
+    codegen ``array_intersect`` per pair counts the overlap — never a
+    replication of the pair list by per-doc shingle count. Pairs with an
+    empty intersection are dropped (as the co-occurrence join does
+    implicitly), which is equivalent for any ``threshold > 0``."""
+    pa = sets_a.select(
+        F.col(id_col).alias("id_a"),
+        F.col("_sh").alias("_sh_a"),
+        F.col("n_sh").alias("n_a"),
     )
+    pb = sets_b.select(
+        F.col(id_col).alias("id_b"),
+        F.col("_sh").alias("_sh_b"),
+        F.col("n_sh").alias("n_b"),
+    )
+    inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
+    pairs = (
+        candidates.join(pa, "id_a")
+        .join(pb, "id_b")
+        .select("id_a", "id_b", "n_a", "n_b", inter.alias("inter"))
+        .filter(F.col("inter") > 0)
+    )
+    return _jaccard_at_least(pairs, threshold)
+
+
+def jaccard_similar_pairs(
+    df: DataFrame,
+    threshold: float = 0.5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+) -> DataFrame:
+    """Document pairs with shingle-set Jaccard >= threshold: the exact
+    co-occurrence self-join of the shingle-hash table (cost bounded by
+    shared-shingle co-occurrence, not n^2). For the candidate-pruned
+    100 TB path use :func:`minhash_near_duplicates`.
+
+    Operates on the 32-bit shingle HASHES (hashed-set Jaccard, as in
+    minhash_near_duplicates): the distinct step, the co-occurrence join
+    and the intersections all work on bigints instead of multi-word
+    strings, and the hashed table is persisted for its multiple
+    consumers. A 32-bit collision merging two shingles is deterministic
+    and reproduced exactly by the SQL oracles.
+    """
+    sh = scoped_persist(shingle_hashes(df, id_col, text_col, n))
+    return _jaccard_at_least(_cooccurrence_pairs(sh, id_col), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -319,32 +315,31 @@ def minhash_signature(
     )
 
 
-def lsh_candidate_pairs(
+def lsh_band_keys(
     signatures: DataFrame,
     bands: int = 4,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Candidate pairs whose signatures collide in >= 1 LSH band.
+    """(id, band_key): one row per document and LSH band.
 
-    Signature columns are split into ``bands`` contiguous slices; the
-    band key is the ``xxhash64`` of the slice (seeded with the band
-    index so identical slices never collide across bands). All band
-    keys are emitted in ONE explode and matched in ONE self-equi-join
-    — one shuffle on band_key regardless of band count, instead of a
-    join+union per band. Probability of collision ~ 1-(1-j^r)^b for
-    Jaccard j.
+    The ``mh_`` signature columns are split into ``bands`` contiguous
+    slices; the band key is ``xxhash64(lit(b), slice)``, the 64-bit hash
+    of the slice seeded with the band index so identical slices never
+    collide across bands. This is the persisted format of
+    :class:`~marketdatapipeline_spark.textops.incremental.LSHDedupStore`'s
+    ``keys/`` table as well as the key of every candidate equi-join: a
+    change to it makes every existing store match nothing.
 
     The 8-byte hashed key replaces the r14 string key (band index +
     ``r`` decimal-printed 61-bit signature values concat-ws'd: ~80
     bytes) — ~10x narrower band-shuffle payload and a bigint join key
     instead of string equality (guide §2.3 "narrower types"/"shuffle
-    keys instead of payloads"). Two slices joining here but not under
+    keys instead of payloads"). Two slices colliding here but not under
     the string key would need an xxhash64 collision between distinct
     (band, slice) tuples — the module's hashed-key convention (see
     :func:`md5_int`; 64-bit space, ~1e-11 odds at 1e4 keys), and a
     false CANDIDATE is additionally filtered by the exact-Jaccard
-    verification every consumer applies. Value-checked cell-exact
-    against the oracle at three scale tiers.
+    verification every consumer applies.
     """
     mh_cols = sorted(
         (c for c in signatures.columns if c.startswith("mh_")),
@@ -369,15 +364,43 @@ def lsh_candidate_pairs(
             for b in range(bands)
         ]
     )
-    keyed = signatures.select(F.col(id_col), F.explode(band_keys).alias("band_key"))
-    left = keyed.select(F.col(id_col).alias("id_a"), "band_key")
-    right = keyed.select(F.col(id_col).alias("id_b"), "band_key")
+    return signatures.select(F.col(id_col), F.explode(band_keys).alias("band_key"))
+
+
+def _band_pairs(keyed: DataFrame, id_col: str, stream: str = "id_a") -> DataFrame:
+    """Distinct (id_a, id_b) pairs, ``id_a < id_b``, of the
+    :func:`lsh_band_keys` rows that share a band key: ONE self-equi-join
+    on band_key — one shuffle on band_key regardless of band count,
+    instead of a join+union per band.
+
+    ``stream`` names the join's left side ("id_a" or "id_b"). A
+    broadcast join streams that side and keeps its partitioning, which
+    the keyed rows inherit from a per-document table: the operators
+    verify by ``id_a`` first, while the store picks one match per
+    larger (``id_b``) batch document, and with ``id_b`` streamed that
+    window needs no shuffle."""
+    build = "id_b" if stream == "id_a" else "id_a"
+    left = keyed.select(F.col(id_col).alias(stream), "band_key")
+    right = keyed.select(F.col(id_col).alias(build), "band_key")
     return (
         left.join(right, "band_key")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame,
+    bands: int = 4,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) whose signatures collide in >= 1
+    LSH band: the band-key self-join of :func:`lsh_band_keys`.
+    Probability of collision ~ 1-(1-j^r)^b for Jaccard j.
+    Value-checked cell-exact against the oracle at three scale tiers.
+    """
+    return _band_pairs(lsh_band_keys(signatures, bands, id_col), id_col)
 
 
 def minhash_near_duplicates(
@@ -416,32 +439,7 @@ def minhash_near_duplicates(
     cands = lsh_candidate_pairs(
         docs.select(id_col, *[f"mh_{i}" for i in range(num_hashes)]), bands, id_col
     )
-    pa = docs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_sh").alias("_sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    pb = docs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_sh").alias("_sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-    return (
-        cands.join(pa, "id_a")
-        .join(pb, "id_b")
-        .select("id_a", "id_b", "n_a", "n_b", inter.alias("inter"))
-        .filter(F.col("inter") > 0)
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verified_pairs(cands, docs, docs, threshold, id_col)
 
 
 def jaccard_pairs_with_lsh_flag(
@@ -464,30 +462,7 @@ def jaccard_pairs_with_lsh_flag(
     :func:`minhash_signature` instead would explode the corpus twice.
     Jaccard here is hashed-set Jaccard (module note)."""
     sh = scoped_persist(shingle_hashes(df, id_col, text_col, n))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "_h")
-    b = sh.select(F.col(id_col).alias("id_b"), "_h")
-    inter = (
-        a.join(b, on="_h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    exact = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    exact = _jaccard_at_least(_cooccurrence_pairs(sh, id_col), threshold)
     sigs = sh.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
     cands = lsh_candidate_pairs(sigs, bands, id_col).withColumn("_f", F.lit(True))
     return exact.join(cands, ["id_a", "id_b"], "left").select(
@@ -642,27 +617,7 @@ def minhash_estimate_quality(
     Truth and estimate are integer ratios — engine-exact, UNROUNDED.
     """
     sh = scoped_persist(shingle_hashes(df, id_col, text_col, n))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "_h")
-    b = sh.select(F.col(id_col).alias("id_b"), "_h")
-    inter = (
-        a.join(b, on="_h")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_i"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("_nb"))
-    jac = (
-        F.col("_i")
-        / (F.col("_na") + F.col("_nb") - F.col("_i")).cast("double")
-    )
-    pairs = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= F.lit(float(threshold)))
-    )
+    pairs = _jaccard_at_least(_cooccurrence_pairs(sh, id_col), float(threshold))
     sigs = sh.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
     siga = sigs.select(
         F.col(id_col).alias("id_a"),

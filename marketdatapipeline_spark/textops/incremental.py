@@ -6,9 +6,11 @@ already accepted without ever rescanning the accepted corpus text.
 
 The store keeps two tables (parquet under one root + a JSON manifest):
 
-- ``keys/``  — (band_key, doc_id): the LSH band keys of every
-  accepted document. Candidate generation against a new batch is ONE
-  equi-join on band_key — never a scan of accepted text.
+- ``keys/``  — (doc_id, band_key): the LSH band keys of every
+  accepted document, in the format
+  :func:`~marketdatapipeline_spark.textops.dedup.lsh_band_keys` defines.
+  Candidate generation against a new batch is ONE equi-join on
+  band_key — never a scan of accepted text.
 - ``sets/``  — (doc_id, _sh, n_sh): each accepted document's hashed
   shingle set (32-bit md5-derived bigints, the repo's hashed-set
   Jaccard convention) for exact verification of candidates.
@@ -38,33 +40,14 @@ from pyspark.sql import functions as F
 from marketdatapipeline_spark.caching import scoped_persist
 from marketdatapipeline_spark.data import storefs
 from marketdatapipeline_spark.session import active_or
-from marketdatapipeline_spark.textops.dedup import minhash_doc_table
+from marketdatapipeline_spark.textops.dedup import (
+    _band_pairs,
+    _verified_pairs,
+    lsh_band_keys,
+    minhash_doc_table,
+)
 
 __all__ = ["LSHDedupStore", "build_lsh_store"]
-
-
-def _band_key_rows(
-    doc_table: DataFrame, num_hashes: int, bands: int, id_col: str
-) -> DataFrame:
-    """(id, band_key) — one row per band, same key layout as
-    lsh_candidate_pairs (r15: xxhash64 of the slice seeded with the
-    band index — 8-byte bigint keys in the stored ``keys/`` parquet
-    and in every candidate equi-join, instead of ~80-byte decimal
-    strings; collision/verification argument at
-    :func:`~marketdatapipeline_spark.textops.dedup.lsh_candidate_pairs`)."""
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    rpb = num_hashes // bands
-    keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[F.col(f"mh_{i}") for i in range(b * rpb, (b + 1) * rpb)],
-            )
-            for b in range(bands)
-        ]
-    )
-    return doc_table.select(F.col(id_col), F.explode(keys).alias("band_key"))
 
 
 def build_lsh_store(
@@ -197,76 +180,13 @@ class LSHDedupStore:
         dir name per table. Data is INVISIBLE until _publish names it."""
         token = uuid.uuid4().hex[:16]
         gen = f"gen-{token}"
-        _band_key_rows(
-            doc_table, self.num_hashes, self.bands, self.id_col
-        ).repartition(F.col("band_key")).write.mode("overwrite").parquet(
-            os.path.join(self.path, "keys", gen)
-        )
+        lsh_band_keys(doc_table, self.bands, self.id_col).repartition(
+            F.col("band_key")
+        ).write.mode("overwrite").parquet(os.path.join(self.path, "keys", gen))
         doc_table.select(self.id_col, "_sh", "n_sh").write.mode(
             "overwrite"
         ).parquet(os.path.join(self.path, "sets", gen))
         return {"keys": gen, "sets": gen}
-
-    def _migrate_legacy(self, spark: SparkSession) -> bool:
-        """Upgrade a pre-manifest-commit store (flat part files directly
-        under ``keys/`` and ``sets/``, no ``_commits/``) in place: move
-        each table's files into a ``gen-legacy-*`` generation directory
-        and publish commit 0 naming them. Returns True if a migration
-        ran. Single-writer, like every other mutation; a crash
-        mid-rename is recoverable by re-running (remaining flat files
-        migrate into a second legacy generation)."""
-        token = uuid.uuid4().hex[:16]
-        # PHASE 1 — validate only (ADVICE r8: the old single loop moved
-        # keys/' files and THEN discovered sets/ wasn't migratable,
-        # leaving the moved files in an uncommitted gen-legacy-* dir
-        # that every retry re-failed past — the store silently read as
-        # empty). Nothing mutates until BOTH tables are confirmed
-        # migratable. A table counts as migratable if it has flat part
-        # files OR stranded gen-legacy-* dirs from a crashed earlier
-        # attempt (this method only runs when no commit exists, so any
-        # gen-legacy dir is by definition unpublished).
-        plan: dict[str, tuple[list, list[str]]] = {}
-        for sub in ("keys", "sets"):
-            tdir = os.path.join(self.path, sub)
-            jvm, fs = storefs.fs(spark, tdir)
-            p = jvm.org.apache.hadoop.fs.Path(tdir)
-            if not fs.exists(p):
-                return False
-            flat, stranded = [], []
-            for st in fs.listStatus(p):
-                name = st.getPath().getName()
-                if st.isFile() and name.endswith(".parquet"):
-                    flat.append(st.getPath())
-                elif st.isDirectory() and name.startswith("gen-legacy-"):
-                    stranded.append(name)
-            if not flat and not stranded:
-                return False
-            plan[sub] = (flat, stranded)
-        # PHASE 2 — mutate: move flat files into a fresh legacy
-        # generation, then publish every legacy generation (new +
-        # stranded) in ONE commit. A crash between the two loops is
-        # recoverable: the next call finds the files as stranded dirs.
-        moved: dict[str, list[str]] = {}
-        for sub in ("keys", "sets"):
-            tdir = os.path.join(self.path, sub)
-            jvm, fs = storefs.fs(spark, tdir)
-            flat, stranded = plan[sub]
-            gens = list(stranded)
-            if flat:
-                gen = f"gen-legacy-{token}"
-                gdir = jvm.org.apache.hadoop.fs.Path(os.path.join(tdir, gen))
-                fs.mkdirs(gdir)
-                for f in flat:
-                    fs.rename(
-                        f,
-                        jvm.org.apache.hadoop.fs.Path(
-                            os.path.join(tdir, gen, f.getName())
-                        ),
-                    )
-                gens.append(gen)
-            moved[sub] = gens
-        self._publish(moved, spark)
-        return True
 
     def _snapshot(self, spark: SparkSession, sub: str) -> DataFrame:
         """Read table ``sub`` pinned to the LATEST COMMIT's generation
@@ -274,17 +194,22 @@ class LSHDedupStore:
         (new generations + new commit) can never leak into this scan —
         after ``ingest`` appends, a late verdict collection would
         otherwise see the batch's own rows in the 'accepted' side and
-        every accepted doc would match itself."""
-        n, payload = self._latest_commit(spark)
-        if n < 0 and self._migrate_legacy(spark):
-            _, payload = self._latest_commit(spark)
+        every accepted doc would match itself.
+
+        ``keys`` must hold bigint band keys, the format
+        :func:`~marketdatapipeline_spark.textops.dedup.lsh_band_keys`
+        writes; a store in an older format (string keys, or the flat
+        pre-commit layout with no ``_commits/``) raises and is left
+        untouched — rebuild it with ``build_lsh_store``."""
+        _, payload = self._latest_commit(spark)
         dirs = [
             os.path.join(self.path, sub, g) for g in payload.get(sub, [])
         ]
         if not dirs:
             raise ValueError(
-                f"store at {self.path} has no commits — build_lsh_store "
-                "publishes commit 0 even for an empty seed"
+                f"store at {self.path} has no commits (an empty root, or "
+                "the pre-commit flat layout) — build_lsh_store publishes "
+                "commit 0 even for an empty seed; rebuild the store with it"
             )
         df = spark.read.parquet(*dirs)
         # r15 switched band keys from decimal strings to xxhash64
@@ -308,7 +233,7 @@ class LSHDedupStore:
     # leaves both consolidated and superseded files on disk).
 
     def keys(self, spark: SparkSession | None = None) -> DataFrame:
-        """(band_key, doc_id) rows of every accepted document, at the
+        """(doc_id, band_key) rows of every accepted document, at the
         latest commit."""
         return self._snapshot(active_or(spark), "keys")
 
@@ -419,44 +344,26 @@ class LSHDedupStore:
         tab = scoped_persist(
             minhash_doc_table(new_docs, self.num_hashes, id_col, text_col, self.n)
         )
-        new_keys = _band_key_rows(tab, self.num_hashes, self.bands, id_col)
+        new_keys = lsh_band_keys(tab, self.bands, id_col)
         old_keys = self._snapshot(spark, "keys")
         old_sets = self._snapshot(spark, "sets")
 
         def best_match(cand: DataFrame, right_sets: DataFrame) -> DataFrame:
             """cand(new_id, old_id) -> (new_id, dup_of, jaccard), the
             highest-jaccard (ties: smallest id) verified match."""
-            left = tab.select(
-                F.col(id_col).alias("new_id"),
-                F.col("_sh").alias("_sh_a"),
-                F.col("n_sh").alias("n_a"),
+            pairs = cand.select(
+                F.col("new_id").alias("id_a"), F.col("old_id").alias("id_b")
             )
-            right = right_sets.select(
-                F.col(id_col).alias("old_id"),
-                F.col("_sh").alias("_sh_b"),
-                F.col("n_sh").alias("n_b"),
-            )
-            inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-            scored = (
-                cand.join(left, "new_id")
-                .join(right, "old_id")
-                .select(
-                    "new_id",
-                    "old_id",
-                    (
-                        inter
-                        / (F.col("n_a") + F.col("n_b") - inter).cast("double")
-                    ).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= self.threshold)
-            )
-            w = Window.partitionBy("new_id").orderBy(
-                F.desc("jaccard"), F.col("old_id")
-            )
+            scored = _verified_pairs(pairs, tab, right_sets, self.threshold, id_col)
+            w = Window.partitionBy("id_a").orderBy(F.desc("jaccard"), F.col("id_b"))
             return (
                 scored.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
-                .select("new_id", F.col("old_id").alias("dup_of"), "jaccard")
+                .select(
+                    F.col("id_a").alias("new_id"),
+                    F.col("id_b").alias("dup_of"),
+                    "jaccard",
+                )
             )
 
         # vs the store: band-key equi-join, then exact verification
@@ -469,20 +376,15 @@ class LSHDedupStore:
         )
         store_dups = best_match(cand_store, old_sets)
 
-        # within the batch: same machinery, keep-min-id — any verified
-        # match to a SMALLER batch id drops a doc, whatever that
+        # within the batch: the band-key self-join, keep-min-id — any
+        # verified match to a SMALLER batch id drops a doc, whatever that
         # smaller doc's own fate (conservative: near-dup of a dropped
         # doc is dropped too; follow dup_of chains or run
         # duplicate_clusters for canonical survivors)
-        left_keys = new_keys.select(F.col(id_col).alias("new_id"), "band_key")
-        right_keys = new_keys.select(F.col(id_col).alias("old_id"), "band_key")
-        cand_batch = (
-            left_keys.join(right_keys, "band_key")
-            .filter(F.col("old_id") < F.col("new_id"))
-            .select("new_id", "old_id")
-            .distinct()
+        cand_batch = _band_pairs(new_keys, id_col, stream="id_b").select(
+            F.col("id_a").alias("old_id"), F.col("id_b").alias("new_id")
         )
-        batch_dups = best_match(cand_batch, tab.select(id_col, "_sh", "n_sh"))
+        batch_dups = best_match(cand_batch, tab)
 
         dups = scoped_persist(
             store_dups.unionByName(

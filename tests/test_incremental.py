@@ -228,20 +228,20 @@ def test_auto_compact_policy(spark, tmp_path):
     assert ids == {1, 10, 11, 12}
 
 
-def test_legacy_flat_layout_migrates_on_first_read(spark, store, tmp_path):
-    """A store persisted by the pre-manifest flat layout (part files
-    directly under keys/ and sets/, no _commits/) loads and upgrades
-    in place: first read migrates the files into a legacy generation
-    and publishes commit 0."""
-    legacy = str(tmp_path / "legacy")
-    # craft the old layout from the modern store's committed contents
-    store.keys(spark).write.parquet(os.path.join(legacy, "keys"))
-    store.sets(spark).write.parquet(os.path.join(legacy, "sets"))
-    import json as _json
-    import shutil
+def test_flat_layout_store_fails_loudly_and_stays_untouched(spark, store, tmp_path):
+    """A store in the pre-commit flat layout (part files directly under
+    keys/ and sets/, no _commits/) holds the string band keys of its
+    time. It cannot be read as bigint keys, so ingest must raise and
+    point at build_lsh_store without moving a single file."""
+    import json
 
-    (tmp_path / "legacy" / "manifest.json").write_text(
-        _json.dumps(
+    flat = tmp_path / "flat"
+    store.keys(spark).select(
+        "doc_id", F.concat_ws("|", F.lit("b0"), "band_key").alias("band_key")
+    ).write.parquet(str(flat / "keys"))
+    store.sets(spark).write.parquet(str(flat / "sets"))
+    (flat / "manifest.json").write_text(
+        json.dumps(
             {
                 "threshold": store.threshold,
                 "num_hashes": store.num_hashes,
@@ -251,83 +251,43 @@ def test_legacy_flat_layout_migrates_on_first_read(spark, store, tmp_path):
             }
         )
     )
-    old = LSHDedupStore.load(legacy, spark)
-    ids = {r["doc_id"] for r in old.sets(spark).select("doc_id").collect()}
-    assert ids == {1, 2}
-    n, payload = old._latest_commit(spark)
-    assert n == 0 and payload["sets"][0].startswith("gen-legacy-")
-    # and the migrated store dedups against its legacy contents
-    v = {
-        r["doc_id"]: r
-        for r in old.ingest(
-            spark.createDataFrame([(5, BASE + " more")], ["doc_id", "text"])
-        ).collect()
-    }
-    assert v[5]["is_duplicate"] and v[5]["dup_of"] == 1
-    shutil.rmtree(legacy, ignore_errors=True)
+    before = sorted(p.relative_to(flat) for p in flat.rglob("*"))
+    batch = spark.createDataFrame([(5, BASE + " more")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="build_lsh_store"):
+        LSHDedupStore.load(str(flat), spark).ingest(batch)
+    assert sorted(p.relative_to(flat) for p in flat.rglob("*")) == before
 
 
-def test_legacy_migration_validates_before_moving(spark, store, tmp_path):
-    """ADVICE r8: _migrate_legacy used to move keys/' flat files into
-    an uncommitted gen-legacy dir and ONLY THEN discover sets/ was
-    missing — every retry re-failed (keys/ had no flat files left) and
-    the store silently read as empty forever. Now validation precedes
-    any rename, and stranded gen-legacy dirs count as migratable on
-    retry."""
-    import glob as _glob
-    import json as _json
-    import shutil
-
-    legacy = str(tmp_path / "half")
-    store.keys(spark).write.parquet(os.path.join(legacy, "keys"))
-    (tmp_path / "half" / "manifest.json").write_text(
-        _json.dumps(
-            {
-                "threshold": store.threshold,
-                "num_hashes": store.num_hashes,
-                "bands": store.bands,
-                "n": store.n,
-                "id_col": store.id_col,
-            }
-        )
+def test_persisted_band_keys_are_pinned(spark, tmp_path):
+    """The keys/ table is a persisted format: a changed seed, slice
+    order or hash in lsh_band_keys would make every existing store
+    match nothing, so its values are pinned literally."""
+    docs = spark.createDataFrame(
+        [
+            (1, BASE),
+            (2, DIFF),
+            (3, "a third fixed document with its own words for the band keys"),
+        ],
+        ["doc_id", "text"],
     )
-    old = LSHDedupStore.load(legacy, spark)
-    # sets/ absent -> not migratable; must raise WITHOUT touching keys/
-    with pytest.raises(ValueError, match="no commits"):
-        old.sets(spark)
-    flat = _glob.glob(os.path.join(legacy, "keys", "*.parquet"))
-    assert flat, "failed validation must not move the keys files"
-    assert not _glob.glob(os.path.join(legacy, "keys", "gen-legacy-*"))
-    # once sets/ appears (e.g. the other half of a partial copy lands),
-    # the same store object migrates and reads fine
-    store.sets(spark).write.parquet(os.path.join(legacy, "sets"))
-    ids = {r["doc_id"] for r in old.sets(spark).select("doc_id").collect()}
-    assert ids == {1, 2}
-    n, _ = old._latest_commit(spark)
-    assert n == 0
-    # and a crash-stranded legacy generation (files moved, commit never
-    # published) is recovered by the next read rather than re-failed
-    crash = str(tmp_path / "crash")
-    store.keys(spark).write.parquet(os.path.join(crash, "keys", "gen-legacy-stranded"))
-    store.sets(spark).write.parquet(os.path.join(crash, "sets"))
-    (tmp_path / "crash" / "manifest.json").write_text(
-        _json.dumps(
-            {
-                "threshold": store.threshold,
-                "num_hashes": store.num_hashes,
-                "bands": store.bands,
-                "n": store.n,
-                "id_col": store.id_col,
-            }
-        )
+    store = build_lsh_store(
+        docs, str(tmp_path / "pinned"), threshold=0.5, num_hashes=16, bands=4
     )
-    crashed = LSHDedupStore.load(crash, spark)
-    kids = {r["doc_id"] for r in crashed.keys(spark).select("doc_id").collect()}
-    assert kids == {1, 2}
-    _, payload = crashed._latest_commit(spark)
-    assert "gen-legacy-stranded" in payload["keys"]
-    shutil.rmtree(legacy, ignore_errors=True)
-    shutil.rmtree(crash, ignore_errors=True)
+    got = sorted((r["doc_id"], r["band_key"]) for r in store.keys(spark).collect())
+    assert got == [
+        (1, -7897510462870351772),
+        (1, -5339410470792839213),
+        (1, 2830571283571995407),
+        (1, 9216591672892213847),
+        (2, -5219976702852906698),
+        (2, -2512449612078174382),
+        (2, 932472415558973006),
+        (2, 8570019395029504203),
+        (3, -2665073486958318323),
+        (3, -431768463314806824),
+        (3, 3167203520981292614),
+        (3, 8697402331923404164),
+    ]
 
 
 def test_pre_r15_string_band_keys_fail_loudly(spark, store):

@@ -128,12 +128,15 @@ def test_lambda_free_shingles_match_transform_reference(spark, n):
     assert got_h.exceptAll(ref_h).count() == 0
 
 
-def test_lsh_bands_must_divide_signature(docs):
+def test_lsh_bands_must_divide_signature(docs, tmp_path):
     from marketdatapipeline_spark.textops.dedup import lsh_candidate_pairs
+    from marketdatapipeline_spark.textops.incremental import build_lsh_store
 
     sigs = minhash_signature(docs, num_hashes=16, n=1)
     with pytest.raises(ValueError, match="divide"):
         lsh_candidate_pairs(sigs, bands=5)
+    with pytest.raises(ValueError, match="divide"):
+        build_lsh_store(docs, str(tmp_path / "store"), num_hashes=16, bands=5)
 
 
 def test_jaccard_pairs_hand_computed(docs):
