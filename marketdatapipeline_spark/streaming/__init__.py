@@ -9,7 +9,10 @@ gets an online, incremental counterpart with explicit state.
 
 Correctness is defined by batch parity: every streaming operator here
 is pinned by a test comparing its ``availableNow`` output against the
-equivalent batch computation on the same rows.
+equivalent batch computation on the same rows. The stateful operators
+(``online_*``) are each one step that the stream and its ``*_batch``
+twin share through the harness in stateful.py, so that parity is
+structural.
 """
 
 from marketdatapipeline_spark.streaming.bars import bars_from_ticks_batch, ticks_to_bars

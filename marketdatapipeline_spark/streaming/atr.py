@@ -20,8 +20,9 @@ Input is bar-shaped (``high``/``low``/``close``) or tick-shaped
 (``price`` only — high and low collapse to the price, so the true
 range degrades to ``|p - prev_p|``, the tick-to-tick range).
 
-Parity: the stream and ``online_atr_batch`` share ``_scan_hlc``
-verbatim, so stream == batch-twin is bit-exact (structural, pinned in
+Parity: the stream and ``online_atr_batch`` run one step (around
+``_scan_hlc``) through the harness in streaming/stateful.py, so
+stream == batch-twin is bit-exact (structural, pinned in
 tests/test_streaming.py); the batch twin tracks the EWMA-scan
 ``atr(method="wilder")`` to ~1e-12 relative (same recurrence, blocked
 FP association).
@@ -29,21 +30,15 @@ FP association).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.stateful import (
+    batch_twin,
+    fields,
+    online_operator,
+)
 
 __all__ = ["online_atr", "online_atr_batch"]
 
@@ -55,18 +50,10 @@ ATR_STATE_SCHEMA = StructType(
     ]
 )
 
-ATR_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("tr", DoubleType()),
-        StructField("atr", DoubleType()),
-    ]
-)
-
 #: zero-history state (mirrors ATR_STATE_SCHEMA field order)
 _FRESH = (0, float("nan"), 0.0)
+
+_ATR_FIELDS = fields("tr", "atr")
 
 
 def _scan_hlc(highs, lows, closes, st: tuple, alpha: float):
@@ -99,34 +86,17 @@ def _hlc(pdf: pd.DataFrame):
     return p, p, p
 
 
-def _atr_func(window: int, state_ttl: str | int | None):
+def _atr_step(window: int):
     alpha = 1.0 / window
 
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            highs, lows, closes = _hlc(pdf)
-            vals, st = _scan_hlc(highs, lows, closes, st, alpha)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(c), tr, atr)
-                    for ts, c, (tr, atr) in zip(pdf["ts"], closes, vals)
-                ],
-                columns=["symbol", "ts", "close", "tr", "atr"],
-            )
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+    def step(pdf: pd.DataFrame, st: tuple):
+        highs, lows, closes = _hlc(pdf)
+        vals, st = _scan_hlc(highs, lows, closes, st, alpha)
+        cols = pd.DataFrame(vals, columns=["tr", "atr"])
+        cols.insert(0, "close", closes.astype(float))
+        return cols, st
 
-    return func
+    return step
 
 
 def online_atr(
@@ -134,19 +104,16 @@ def online_atr(
     window: int = 14,
     state_ttl: str | None = None,
 ) -> DataFrame:
-    """Continuous Wilder ATR over a stream of per-symbol bars or ticks.
-
-    One groupBy(symbol) shuffle; the state store pins each symbol's
-    scan to one task per micro-batch. ``state_ttl`` evicts quiet
-    symbols' 3-field state (same semantics as online_indicators)."""
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _atr_func(window, state_ttl),
-        outputStructType=ATR_OUTPUT_SCHEMA,
-        stateStructType=ATR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    """Continuous Wilder ATR over a stream of per-symbol bars or ticks:
+    ``symbol, ts, close, tr, atr``. ``state_ttl`` evicts quiet symbols'
+    3-field state (same semantics as online_indicators)."""
+    return online_operator(
+        ticks,
+        _atr_step(window),
+        _FRESH,
+        ATR_STATE_SCHEMA,
+        fields("close") + _ATR_FIELDS,
+        state_ttl,
     )
 
 
@@ -155,25 +122,6 @@ def online_atr_batch(
     window: int = 14,
     order_cols: tuple[str, ...] = ("datetime", "bar_id"),
 ) -> DataFrame:
-    """Batch twin of ``online_atr``: the identical ``_scan_hlc``
-    recurrence run from fresh state over each symbol's full in-order
-    history via plain ``applyInPandas``. Adds ``tr`` and ``atr`` to
-    the input columns."""
-    import pyspark.sql.types as T
-
-    alpha = 1.0 / window
-    out_schema = T.StructType(
-        list(bars.schema.fields)
-        + [StructField("tr", DoubleType()), StructField("atr", DoubleType())]
-    )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        highs, lows, closes = _hlc(pdf)
-        vals, _ = _scan_hlc(highs, lows, closes, _FRESH, alpha)
-        return pd.concat(
-            [pdf, pd.DataFrame(vals, columns=["tr", "atr"])], axis=1
-        )
-
-    return bars.groupBy("symbol").applyInPandas(run, schema=out_schema)
+    """Batch twin of ``online_atr``: adds ``tr`` and ``atr`` to the
+    input columns."""
+    return batch_twin(bars, _atr_step(window), _FRESH, _ATR_FIELDS, order_cols)

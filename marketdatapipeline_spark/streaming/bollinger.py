@@ -3,8 +3,9 @@ headline volatility indicator (src/features/engineering.py bb_*).
 
 RSI/MACD, anchored VWAP, ATR, KAMA, the volume clock, and CUSUM
 already stream; Bollinger completes the set: O(window) state per
-symbol (the trailing closes), ``applyInPandasWithState`` carry, and
-a batch twin sharing the scan verbatim (bit-exact stream == batch).
+symbol (the trailing closes), and one step (around ``_scan_boll``)
+that the stream and its batch twin share through the harness in
+streaming/stateful.py (bit-exact stream == batch).
 The twin tracks the batch feature pipeline's prefix-sum RollingPlan
 to FP-association tolerance — same split as the ATR/Wilder family.
 
@@ -16,21 +17,15 @@ null until the window fills; std is ddof=1; ``bb_width =
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.stateful import (
+    batch_twin,
+    fields,
+    online_operator,
+)
 
 __all__ = ["online_bollinger", "online_bollinger_batch"]
 
@@ -38,17 +33,9 @@ BOLL_STATE_SCHEMA = StructType(
     [StructField("tail", ArrayType(DoubleType()))]
 )
 
-BOLL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("bb_middle", DoubleType()),
-        StructField("bb_upper", DoubleType()),
-        StructField("bb_lower", DoubleType()),
-        StructField("bb_width", DoubleType()),
-    ]
-)
+_FRESH = ([],)
+
+_BOLL_FIELDS = fields("bb_middle", "bb_upper", "bb_lower", "bb_width")
 
 
 def _scan_boll(prices, tail: list, window: int, n_std: float):
@@ -80,34 +67,15 @@ def _scan_boll(prices, tail: list, window: int, n_std: float):
     return out, tail
 
 
-def _boll_func(window: int, n_std: float, state_ttl):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (tail,) = state.get if state.exists else ([],)
-        tail = list(tail)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, tail = _scan_boll(pdf["price"], tail, window, n_std)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(p), m, u, lo, w)
-                    for ts, p, (m, u, lo, w) in zip(
-                        pdf["ts"], pdf["price"], vals
-                    )
-                ],
-                columns=[f.name for f in BOLL_OUTPUT_SCHEMA.fields],
-            )
-        state.update((tail,))
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _boll_step(window: int, n_std: float, price_col: str):
+    def step(pdf: pd.DataFrame, st: tuple):
+        prices = pdf[price_col]
+        vals, tail = _scan_boll(prices, list(st[0]), window, n_std)
+        cols = pd.DataFrame(vals, columns=[f.name for f in _BOLL_FIELDS])
+        cols.insert(0, "price", prices.astype(float))
+        return cols, (tail,)
 
-    return func
+    return step
 
 
 def online_bollinger(
@@ -120,14 +88,13 @@ def online_bollinger(
     state per symbol."""
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _boll_func(window, float(n_std), state_ttl),
-        outputStructType=BOLL_OUTPUT_SCHEMA,
-        stateStructType=BOLL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    return online_operator(
+        ticks,
+        _boll_step(window, float(n_std), "price"),
+        _FRESH,
+        BOLL_STATE_SCHEMA,
+        fields("price") + _BOLL_FIELDS,
+        state_ttl,
     )
 
 
@@ -138,27 +105,12 @@ def online_bollinger_batch(
     price_col: str = "price",
     order_cols: tuple[str, ...] = ("ts",),
 ) -> DataFrame:
-    """Batch twin: identical ``_scan_boll`` from fresh state over
-    each symbol's in-order history."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(ticks.schema.fields)
-        + [
-            StructField("bb_middle", DoubleType()),
-            StructField("bb_upper", DoubleType()),
-            StructField("bb_lower", DoubleType()),
-            StructField("bb_width", DoubleType()),
-        ]
+    """Batch twin of ``online_bollinger``: adds the four band columns
+    to the input columns."""
+    return batch_twin(
+        ticks,
+        _boll_step(window, float(n_std), price_col),
+        _FRESH,
+        _BOLL_FIELDS,
+        order_cols,
     )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_boll(pdf[price_col], [], window, float(n_std))
-        extra = pd.DataFrame(
-            vals, columns=["bb_middle", "bb_upper", "bb_lower", "bb_width"]
-        )
-        return pd.concat([pdf, extra], axis=1)
-
-    return ticks.groupBy("symbol").applyInPandas(run, schema=out_schema)

@@ -4,13 +4,14 @@ every tick exactly once.
 
 ``start_ingestion`` originally ran two independent streaming queries
 over the same tick directory (one per leg), which read and parsed each
-dropped file twice (VERDICT r7 #2). This operator fuses the two state
-handlers — the IDENTICAL ``_scan_closes`` recurrence from
-streaming/stateful.py and ``_scan_vwap`` from streaming/vwap.py, called
-verbatim so the per-leg parity pins (stream == batch twin == oracle)
-transfer structurally — behind one combined 14-field state vector per
-symbol (11 indicator fields + 3 VWAP fields). One groupBy(symbol)
-shuffle, one state store, one sorted pass per micro-batch.
+dropped file twice (VERDICT r7 #2). This operator's step calls the two
+legs' steps — RSI/MACD from streaming/stateful.py and anchored VWAP
+from streaming/vwap.py, unchanged, so the per-leg parity pins (stream
+== batch twin == oracle) transfer structurally — on the two slices of
+one combined 14-field state vector per symbol (11 indicator fields + 3
+VWAP fields), and runs through the same harness as they do. One
+groupBy(symbol) shuffle, one state store, one sorted pass per
+micro-batch.
 
 Output is the wide union of both legs' rows (one row per tick); the
 pipeline's ``foreachBatch`` sink projects the two narrow sink schemas
@@ -19,9 +20,6 @@ back out, so everything downstream of ``<out>/indicators`` and
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -36,22 +34,20 @@ from pyspark.sql.types import (
 from marketdatapipeline_spark.streaming.stateful import (
     STATE_SCHEMA,
     _FRESH_STATE,
-    _coeffs,
-    _scan_closes,
-    _ttl_ms,
+    _indicator_step,
+    online_operator,
 )
 from marketdatapipeline_spark.streaming.vwap import (
     VWAP_STATE_SCHEMA,
     _FRESH,
-    _anchor_us,
-    _scan_vwap,
+    _vwap_step,
 )
 
 __all__ = ["online_ticks", "TICKS_OUTPUT_SCHEMA"]
 
 #: combined state: the indicator vector then the VWAP vector, in their
 #: home modules' field orders — a pure concatenation, so either leg's
-#: scan function slices its own fields untouched.
+#: step slices its own fields untouched.
 COMBINED_STATE_SCHEMA = StructType(
     list(STATE_SCHEMA.fields) + list(VWAP_STATE_SCHEMA.fields)
 )
@@ -73,55 +69,28 @@ TICKS_OUTPUT_SCHEMA = StructType(
     ]
 )
 
+_OUT_FIELDS = TICKS_OUTPUT_SCHEMA.fields[2:]  # after symbol, ts
 
-def _combined_func(
+
+def _ticks_step(
     anchor: str,
     rsi_period: int,
     macd_fast: int,
     macd_slow: int,
     macd_signal: int,
-    state_ttl: str | int | None,
 ):
-    coeffs = _coeffs(rsi_period, macd_fast, macd_slow, macd_signal)
+    ind_step = _indicator_step(
+        rsi_period, macd_fast, macd_slow, macd_signal, "price"
+    )
+    vwap_step = _vwap_step(anchor)
+    names = [f.name for f in _OUT_FIELDS]
 
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else (_FRESH_STATE + _FRESH)
-        ind_st, vwap_st = st[:_N_IND], st[_N_IND:]
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, ind_st = _scan_closes(pdf["price"], ind_st, coeffs)
-            vwaps, vwap_st = _scan_vwap(pdf, vwap_st, anchor)
-            out = pd.DataFrame(
-                {
-                    "symbol": key[0],
-                    "ts": pdf["ts"].to_numpy(),
-                    "price": pdf["price"].to_numpy(),
-                    "size": pdf["size"].to_numpy(),
-                    # nullable Float64: NaN/None cross Arrow as NULL,
-                    # matching each home module's convention
-                    "rsi": pd.array(
-                        [v[0] for v in vals], dtype="Float64"
-                    ),
-                    "macd": [v[1] for v in vals],
-                    "macd_signal": [v[2] for v in vals],
-                    "macd_histogram": [v[3] for v in vals],
-                    "vwap": pd.array(vwaps, dtype="Float64"),
-                }
-            )
-            out["vwap_dev"] = out["price"] - out["vwap"]
-            yield out
-        state.update(ind_st + vwap_st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+    def step(pdf: pd.DataFrame, st: tuple):
+        ind, ind_st = ind_step(pdf, st[:_N_IND])
+        vw, vwap_st = vwap_step(pdf, st[_N_IND:])
+        return pd.concat([ind, vw], axis=1)[names], ind_st + vwap_st
 
-    return func
+    return step
 
 
 def online_ticks(
@@ -137,15 +106,11 @@ def online_ticks(
     (``symbol, ts, price, size``), one output row per tick. One
     shuffle, one state store; ``state_ttl`` evicts quiet symbols
     exactly as in the per-leg operators."""
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)  # validate
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _combined_func(
-            anchor, rsi_period, macd_fast, macd_slow, macd_signal, state_ttl
-        ),
-        outputStructType=TICKS_OUTPUT_SCHEMA,
-        stateStructType=COMBINED_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    return online_operator(
+        ticks,
+        _ticks_step(anchor, rsi_period, macd_fast, macd_slow, macd_signal),
+        _FRESH_STATE + _FRESH,
+        COMBINED_STATE_SCHEMA,
+        _OUT_FIELDS,
+        state_ttl,
     )

@@ -13,16 +13,14 @@ when ``s_neg < -h`` -> -1 event, reset ``s_neg``.
 The reset makes this a NON-linear recurrence — unlike EWMA there is
 no block-parallel decomposition and no SQL restatement, so the
 operator lives in the streaming family: per-symbol state (the two
-accumulators + last price) carried across micro-batches by
-``applyInPandasWithState``, with a batch twin sharing the scan
-verbatim (bit-exact parity, the repo's stream==batch discipline).
-O(symbols) state; one groupBy(symbol) shuffle.
+accumulators + last price) carried across micro-batches, and one
+step (around ``_scan_cusum``) that the stream and its batch twin
+share through the harness in streaming/stateful.py (bit-exact
+parity, the repo's stream==batch discipline). O(symbols) state; one
+groupBy(symbol) shuffle.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -30,13 +28,15 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.stateful import (
+    batch_twin,
+    fields,
+    online_operator,
+)
 
 __all__ = ["online_cusum", "online_cusum_batch"]
 
@@ -49,18 +49,9 @@ CUSUM_STATE_SCHEMA = StructType(
     ]
 )
 
-CUSUM_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("s_pos", DoubleType()),
-        StructField("s_neg", DoubleType()),
-        StructField("event", IntegerType()),
-    ]
-)
-
 _FRESH = (0, float("nan"), 0.0, 0.0)
+
+_CUSUM_FIELDS = fields("s_pos", "s_neg") + fields("event", dtype=IntegerType())
 
 
 def _scan_cusum(prices, st: tuple, threshold: float):
@@ -87,33 +78,16 @@ def _scan_cusum(prices, st: tuple, threshold: float):
     return out, (n_rows, last, s_pos, s_neg)
 
 
-def _cusum_func(threshold: float, state_ttl: str | int | None):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, st = _scan_cusum(pdf["price"], st, threshold)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(p), sp, sn, ev)
-                    for ts, p, (sp, sn, ev) in zip(
-                        pdf["ts"], pdf["price"], vals
-                    )
-                ],
-                columns=["symbol", "ts", "price", "s_pos", "s_neg", "event"],
-            )
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _cusum_step(threshold: float, price_col: str):
+    def step(pdf: pd.DataFrame, st: tuple):
+        prices = pdf[price_col]
+        vals, st = _scan_cusum(prices, st, threshold)
+        cols = pd.DataFrame(vals, columns=["s_pos", "s_neg", "event"])
+        cols["event"] = cols["event"].astype("int32")
+        cols.insert(0, "price", prices.astype(float))
+        return cols, st
 
-    return func
+    return step
 
 
 def online_cusum(
@@ -126,14 +100,13 @@ def online_cusum(
     on it downstream to get the sampled event times."""
     if threshold <= 0:
         raise ValueError(f"threshold must be > 0, got {threshold}")
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _cusum_func(float(threshold), state_ttl),
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    return online_operator(
+        ticks,
+        _cusum_step(float(threshold), "price"),
+        _FRESH,
+        CUSUM_STATE_SCHEMA,
+        fields("price") + _CUSUM_FIELDS,
+        state_ttl,
     )
 
 
@@ -143,26 +116,8 @@ def online_cusum_batch(
     price_col: str = "price",
     order_cols: tuple[str, ...] = ("ts",),
 ) -> DataFrame:
-    """Batch twin: identical ``_scan_cusum`` from fresh state over
-    each symbol's in-order history; adds s_pos/s_neg/event."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            StructField("s_pos", DoubleType()),
-            StructField("s_neg", DoubleType()),
-            StructField("event", IntegerType()),
-        ]
+    """Batch twin of ``online_cusum``: adds s_pos/s_neg/event to the
+    input columns."""
+    return batch_twin(
+        df, _cusum_step(float(threshold), price_col), _FRESH, _CUSUM_FIELDS, order_cols
     )
-    order = list(order_cols)
-    th = float(threshold)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_cusum(pdf[price_col], _FRESH, th)
-        extra = pd.DataFrame(vals, columns=["s_pos", "s_neg", "event"])
-        extra["event"] = extra["event"].astype("int32")
-        return pd.concat([pdf, extra], axis=1)
-
-    return df.groupBy("symbol").applyInPandas(run, schema=out_schema)

@@ -8,9 +8,10 @@ data-dependent — and no constant-alpha blocked decomposition
 applies. That makes it a natural citizen of the streaming family:
 O(window) state per symbol (the trailing closes that define the
 efficiency ratio, plus the running KAMA), carried across
-micro-batches by ``applyInPandasWithState``, with a batch twin
-sharing the scan verbatim (bit-exact stream == batch, the repo's
-parity discipline).
+micro-batches, and one step (around ``_scan_kama``) that the stream
+and its batch twin share through the harness in
+streaming/stateful.py (bit-exact stream == batch, the repo's parity
+discipline).
 
 Convention (Kaufman's book / the common TA implementation):
 ``er = |p_t - p_{t-n}| / sum |p_i - p_{i-1}|`` over the window
@@ -21,22 +22,21 @@ with a full window (``kama = p`` there), null before.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.stateful import (
+    batch_twin,
+    fields,
+    online_operator,
+)
 
 __all__ = ["online_kama", "online_kama_batch"]
 
@@ -48,15 +48,9 @@ KAMA_STATE_SCHEMA = StructType(
     ]
 )
 
-KAMA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("efficiency_ratio", DoubleType()),
-        StructField("kama", DoubleType()),
-    ]
-)
+_FRESH = (0, [], float("nan"))
+
+_KAMA_FIELDS = fields("efficiency_ratio", "kama")
 
 
 def _scan_kama(
@@ -92,34 +86,15 @@ def _scan_kama(
     return out, (n_rows, tail, kama)
 
 
-_FRESH = (0, [], float("nan"))
+def _kama_step(window: int, fast: int, slow: int, price_col: str):
+    def step(pdf: pd.DataFrame, st: tuple):
+        prices = pdf[price_col]
+        vals, st = _scan_kama(prices, st, window, fast, slow)
+        cols = pd.DataFrame(vals, columns=["efficiency_ratio", "kama"])
+        cols.insert(0, "price", prices.astype(float))
+        return cols, st
 
-
-def _kama_func(window: int, fast: int, slow: int, state_ttl):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, st = _scan_kama(pdf["price"], st, window, fast, slow)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(p), er, k)
-                    for ts, p, (er, k) in zip(pdf["ts"], pdf["price"], vals)
-                ],
-                columns=["symbol", "ts", "price", "efficiency_ratio", "kama"],
-            )
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
-
-    return func
+    return step
 
 
 def online_kama(
@@ -134,14 +109,13 @@ def online_kama(
         raise ValueError(
             f"need window >= 1, 1 <= fast < slow; got {window}, {fast}, {slow}"
         )
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _kama_func(window, fast, slow, state_ttl),
-        outputStructType=KAMA_OUTPUT_SCHEMA,
-        stateStructType=KAMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    return online_operator(
+        ticks,
+        _kama_step(window, fast, slow, "price"),
+        _FRESH,
+        KAMA_STATE_SCHEMA,
+        fields("price") + _KAMA_FIELDS,
+        state_ttl,
     )
 
 
@@ -153,23 +127,8 @@ def online_kama_batch(
     price_col: str = "price",
     order_cols: tuple[str, ...] = ("ts",),
 ) -> DataFrame:
-    """Batch twin: the identical ``_scan_kama`` from fresh state over
-    each symbol's in-order history."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(ticks.schema.fields)
-        + [
-            StructField("efficiency_ratio", DoubleType()),
-            StructField("kama", DoubleType()),
-        ]
+    """Batch twin of ``online_kama``: adds efficiency_ratio and kama
+    to the input columns."""
+    return batch_twin(
+        ticks, _kama_step(window, fast, slow, price_col), _FRESH, _KAMA_FIELDS, order_cols
     )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_kama(pdf[price_col], _FRESH, window, fast, slow)
-        extra = pd.DataFrame(vals, columns=["efficiency_ratio", "kama"])
-        return pd.concat([pdf, extra], axis=1)
-
-    return ticks.groupBy("symbol").applyInPandas(run, schema=out_schema)

@@ -1,10 +1,21 @@
-"""Online (incremental) technical indicators with explicit state.
+"""The online-operator harness, and online RSI/MACD on it.
 
-Streaming counterpart of the batch EWM stage
-(features/ewm.py:add_technical_ewm_features — itself the Spark
-re-expression of reference src/features/engineering.py:36-57). Where
-the batch path needs each symbol's full history in hand, this operator
-carries an **11-field state vector per symbol** (9 doubles + 2 longs) across micro-batches
+Every stateful operator in this package is one ``step(pdf, state) ->
+(columns, state)`` plus its state schema, fresh state and output
+fields. The harness here runs a step two ways, so the stream and its
+batch twin cannot drift apart:
+
+* :func:`online_operator` — the one ``applyInPandasWithState`` call:
+  per symbol, each micro-batch chunk is sorted by ``ts`` and stepped
+  from the carried state; a key idle past ``state_ttl`` is evicted;
+* :func:`batch_twin` — the one ``applyInPandas`` call: each symbol's
+  full in-order history stepped once from fresh state.
+
+RSI/MACD, the operator defined here, is the streaming counterpart of
+the batch EWM stage (features/ewm.py:add_technical_ewm_features —
+itself the Spark re-expression of reference
+src/features/engineering.py:36-57). Where the batch path needs each
+symbol's full history in hand, this operator carries an **11-field state vector per symbol** (9 doubles + 2 longs) across micro-batches
 via ``applyInPandasWithState``, so an unbounded tick feed gets
 RSI/MACD continuously with O(symbols) state, not O(rows).
 
@@ -30,12 +41,13 @@ the answer in ANY engine, including the reference's.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
+    DataType,
     DoubleType,
     LongType,
     StringType,
@@ -43,6 +55,10 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+#: ``step(pdf, state) -> (columns, state)``: ``pdf`` is one symbol's rows
+#: in order with a 0..n-1 index, ``columns`` a frame on that index
+Step = Callable[[pd.DataFrame, tuple], tuple[pd.DataFrame, tuple]]
 
 STATE_SCHEMA = StructType(
     [
@@ -57,18 +73,6 @@ STATE_SCHEMA = StructType(
         StructField("slow_d", DoubleType()),
         StructField("sig_n", DoubleType()),
         StructField("sig_d", DoubleType()),
-    ]
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("rsi", DoubleType()),
-        StructField("macd", DoubleType()),
-        StructField("macd_signal", DoubleType()),
-        StructField("macd_histogram", DoubleType()),
     ]
 )
 
@@ -153,77 +157,140 @@ def _scan_closes(closes, st: tuple, coeffs: tuple):
 
 def _ttl_ms(ttl: str | int) -> int:
     """'30 minutes' / '1 hour' / raw ms int -> milliseconds (pyspark's
-    GroupState.setTimeoutDuration accepts only an int)."""
+    GroupState.setTimeoutDuration accepts only a positive int)."""
     if isinstance(ttl, int):
-        return ttl
-    try:
-        n, unit = ttl.strip().split()
-        mult = {
-            "millisecond": 1,
-            "second": 1000,
-            "minute": 60_000,
-            "hour": 3_600_000,
-            "day": 86_400_000,
-        }[unit.lower().rstrip("s")]
-        return int(n) * mult
-    except (ValueError, KeyError) as e:
-        raise ValueError(
-            f"unparseable state_ttl {ttl!r}: expected '<int> "
-            "milliseconds|seconds|minutes|hours|days' or raw ms int"
-        ) from e
+        ms = ttl
+    else:
+        try:
+            n, unit = ttl.strip().split()
+            mult = {
+                "millisecond": 1,
+                "second": 1000,
+                "minute": 60_000,
+                "hour": 3_600_000,
+                "day": 86_400_000,
+            }[unit.lower().rstrip("s")]
+            ms = int(n) * mult
+        except (ValueError, KeyError) as e:
+            raise ValueError(
+                f"unparseable state_ttl {ttl!r}: expected '<int> "
+                "milliseconds|seconds|minutes|hours|days' or raw ms int"
+            ) from e
+    if ms <= 0:
+        raise ValueError(f"state_ttl must be positive, got {ttl!r}")
+    return ms
 
 
-def _indicator_func(
+def fields(*names: str, dtype: DataType = DoubleType()) -> list[StructField]:
+    """One nullable ``dtype`` field per name."""
+    return [StructField(n, dtype) for n in names]
+
+
+def _handler(step: Step, fresh: tuple, ttl_ms: int | None):
+    """The ``applyInPandasWithState`` function for ``step``: emits
+    ``symbol, ts`` plus the step's columns for every non-empty chunk."""
+
+    def func(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            # symbol went quiet past the TTL: evict its state row. If it
+            # later resumes, it restarts from fresh state (same
+            # convention as a new symbol appearing).
+            state.remove()
+            return
+        st = tuple(state.get) if state.exists else fresh
+        for pdf in pdfs:
+            if pdf.empty:
+                continue
+            pdf = pdf.sort_values("ts").reset_index(drop=True)
+            cols, st = step(pdf, st)
+            yield pd.concat([pdf[["symbol", "ts"]], cols], axis=1)
+        state.update(st)
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
+
+    return func
+
+
+def online_operator(
+    ticks: DataFrame,
+    step: Step,
+    fresh: tuple,
+    state_schema: StructType,
+    out_fields: list[StructField],
+    state_ttl: str | int | None,
+) -> DataFrame:
+    """``step`` over a stream, one output row per input row (append
+    mode). The groupBy(symbol) is the only shuffle; state-store
+    partitioning then pins each symbol's scan to one task per
+    micro-batch. ``state_ttl`` (e.g. ``"30 minutes"``) enables
+    processing-time eviction of symbols with no rows for that long; it
+    is validated here, at call time, not on the first micro-batch."""
+    ttl_ms = None if state_ttl is None else _ttl_ms(state_ttl)
+    return ticks.groupBy("symbol").applyInPandasWithState(
+        _handler(step, fresh, ttl_ms),
+        outputStructType=StructType(
+            [
+                StructField("symbol", StringType()),
+                StructField("ts", TimestampType()),
+                *out_fields,
+            ]
+        ),
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf="NoTimeout" if ttl_ms is None else "ProcessingTimeTimeout",
+    )
+
+
+def batch_twin(
+    df: DataFrame,
+    step: Step,
+    fresh: tuple,
+    new_fields: list[StructField],
+    order_cols: tuple[str, ...],
+) -> DataFrame:
+    """The batch twin of an online operator: ``step`` from ``fresh``
+    over each symbol's full history in ``order_cols`` order, via plain
+    ``applyInPandas``. Keeps every input column and appends
+    ``new_fields``. Stream == twin is then bit-exact on an in-order
+    feed, whatever the micro-batch slicing (tests/test_streaming.py)."""
+    order = list(order_cols)
+    names = [f.name for f in new_fields]
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order).reset_index(drop=True)
+        cols, _ = step(pdf, fresh)
+        return pd.concat([pdf, cols[names]], axis=1)
+
+    return df.groupBy("symbol").applyInPandas(
+        run, schema=StructType([*df.schema.fields, *new_fields])
+    )
+
+
+_INDICATOR_FIELDS = fields("rsi", "macd", "macd_signal", "macd_histogram")
+
+
+def _indicator_step(
     rsi_period: int,
     macd_fast: int,
     macd_slow: int,
     macd_signal: int,
-    state_ttl: str | int | None = None,
-):
+    price_col: str,
+) -> Step:
     coeffs = _coeffs(rsi_period, macd_fast, macd_slow, macd_signal)
 
-    def func(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # symbol went quiet past the TTL: evict its state row.
-            # If it later resumes, indicators restart from fresh state
-            # (same convention as a new symbol appearing).
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH_STATE
+    def step(pdf: pd.DataFrame, st: tuple):
+        closes = pdf[price_col]
+        vals, st = _scan_closes(closes, st, coeffs)
+        cols = pd.DataFrame(vals, columns=[f.name for f in _INDICATOR_FIELDS])
+        # nullable Float64 ⇒ NaN crosses Arrow as NULL, matching the
+        # batch path's nan_to_null (features/ewm.py:44).
+        cols["rsi"] = cols["rsi"].astype("Float64")
+        cols.insert(0, "close", closes.astype(float))
+        return cols, st
 
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            closes = pdf["price" if "price" in pdf else "close"]
-            vals, st = _scan_closes(closes, st, coeffs)
-            out = pd.DataFrame(
-                [
-                    (key[0], ts, float(close), rsi, macd, signal, hist)
-                    for ts, close, (rsi, macd, signal, hist) in zip(
-                        pdf["ts"], closes, vals
-                    )
-                ],
-                columns=[
-                    "symbol",
-                    "ts",
-                    "close",
-                    "rsi",
-                    "macd",
-                    "macd_signal",
-                    "macd_histogram",
-                ],
-            )
-            # nullable Float64 ⇒ NaN crosses Arrow as NULL, matching the
-            # batch path's nan_to_null (features/ewm.py:44).
-            out["rsi"] = out["rsi"].astype("Float64")
-            yield out
-
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
-
-    return func
+    return step
 
 
 def online_indicators(
@@ -237,28 +304,22 @@ def online_indicators(
     """Continuous RSI/MACD over a stream of per-symbol prices.
 
     Input: streaming DataFrame with ``symbol, ts`` and ``price`` (tick
-    shape) or ``close`` (bar shape). Output: one row per input row with
-    the indicator columns, emitted in append mode. The groupBy(symbol)
-    is the only shuffle; state-store partitioning then pins each
-    symbol's scan to one task per micro-batch.
+    shape) or ``close`` (bar shape). Output: ``symbol, ts, close`` and
+    the indicator columns, one row per input row.
 
-    ``state_ttl`` (e.g. ``"30 minutes"``) enables processing-time
-    eviction: a symbol with no ticks for the TTL drops its state
-    vector and restarts fresh if it resumes. State is 11 fields per
-    symbol either way; the TTL matters when the SYMBOL SPACE itself
-    churns (delisted tickers, session-scoped ids) — without it, a
-    year of churn accumulates state for every symbol ever seen.
+    ``state_ttl`` matters when the SYMBOL SPACE itself churns
+    (delisted tickers, session-scoped ids): without it, a year of
+    churn accumulates an 11-field state row for every symbol ever
+    seen.
     """
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _indicator_func(
-            rsi_period, macd_fast, macd_slow, macd_signal, state_ttl
-        ),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    price_col = "price" if "price" in ticks.columns else "close"
+    return online_operator(
+        ticks,
+        _indicator_step(rsi_period, macd_fast, macd_slow, macd_signal, price_col),
+        _FRESH_STATE,
+        STATE_SCHEMA,
+        fields("close") + _INDICATOR_FIELDS,
+        state_ttl,
     )
 
 
@@ -270,9 +331,7 @@ def online_indicators_batch(
     macd_signal: int = 9,
     order_cols: tuple[str, ...] = ("datetime", "bar_id"),
 ) -> DataFrame:
-    """Batch twin of ``online_indicators``: the IDENTICAL state-handler
-    recurrence (``_scan_closes``), run from fresh state over each
-    symbol's full in-order history via plain ``applyInPandas``.
+    """Batch twin of ``online_indicators``.
 
     This is the driver-gate surface for the stateful streaming path:
     pytest pins stream == batch-twin on the same feed (state carry
@@ -282,31 +341,13 @@ def online_indicators_batch(
     oracle-checked by transitivity.
 
     Input: static DataFrame with ``symbol``, ``close`` and the
-    ``order_cols`` (bar shape). Output keeps ``symbol`` + order_cols +
-    close and adds rsi / macd / macd_signal / macd_histogram.
+    ``order_cols`` (bar shape). Output keeps every input column and
+    adds rsi / macd / macd_signal / macd_histogram.
     """
-    import pyspark.sql.types as T
-
-    coeffs = _coeffs(rsi_period, macd_fast, macd_slow, macd_signal)
-    in_schema = bars.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            StructField("rsi", DoubleType()),
-            StructField("macd", DoubleType()),
-            StructField("macd_signal", DoubleType()),
-            StructField("macd_histogram", DoubleType()),
-        ]
+    return batch_twin(
+        bars,
+        _indicator_step(rsi_period, macd_fast, macd_slow, macd_signal, "close"),
+        _FRESH_STATE,
+        _INDICATOR_FIELDS,
+        order_cols,
     )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_closes(pdf["close"], _FRESH_STATE, coeffs)
-        ind = pd.DataFrame(
-            vals, columns=["rsi", "macd", "macd_signal", "macd_histogram"]
-        )
-        ind["rsi"] = ind["rsi"].astype("Float64")  # NaN -> NULL via Arrow
-        return pd.concat([pdf, ind], axis=1)
-
-    return bars.groupBy("symbol").applyInPandas(run, schema=out_schema)

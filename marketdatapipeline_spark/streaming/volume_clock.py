@@ -10,44 +10,32 @@ O(symbols) state design as streaming/vwap.py's anchored VWAP).
 The stream emits the per-tick bucket assignment (append mode);
 downstream aggregation to OHLCV-per-bucket composes with any sink
 (the bucket id is deterministic, so late aggregation is an ordinary
-groupBy). Parity is structural: the handler and the batch twin share
-``_scan_cum`` verbatim, and with integer-valued sizes every prefix
+groupBy). Parity is structural: the stream and the batch twin run one
+step (around ``_scan_cum``) through the harness in
+streaming/stateful.py, and with integer-valued sizes every prefix
 sum is exact, so stream == batch == the window-based
 ``volume_bars`` bucket column bit-for-bit.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.stateful import (
+    batch_twin,
+    fields,
+    online_operator,
+)
 
 __all__ = ["online_volume_clock", "online_volume_clock_batch"]
 
 VC_STATE_SCHEMA = StructType([StructField("cum_volume", DoubleType())])
 
-VC_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("size", DoubleType()),
-        StructField("bucket", LongType()),
-        StructField("cum_volume", DoubleType()),
-    ]
-)
+_FRESH = (0.0,)
+
+_VC_FIELDS = fields("bucket", dtype=LongType()) + fields("cum_volume")
 
 
 def _scan_cum(sizes, cum: float, bucket_size: float):
@@ -62,33 +50,15 @@ def _scan_cum(sizes, cum: float, bucket_size: float):
     return out, cum
 
 
-def _vc_func(bucket_size: float, state_ttl: str | int | None):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (cum,) = state.get if state.exists else (0.0,)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, cum = _scan_cum(pdf["size"], cum, bucket_size)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, p, s, b, c)
-                    for ts, p, s, (b, c) in zip(
-                        pdf["ts"], pdf["price"], pdf["size"], vals
-                    )
-                ],
-                columns=["symbol", "ts", "price", "size", "bucket", "cum_volume"],
-            )
-        state.update((cum,))
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _vc_step(bucket_size: float):
+    def step(pdf: pd.DataFrame, st: tuple):
+        vals, cum = _scan_cum(pdf["size"], st[0], bucket_size)
+        cols = pd.DataFrame(vals, columns=["bucket", "cum_volume"])
+        cols.insert(0, "size", pdf["size"])
+        cols.insert(0, "price", pdf["price"])
+        return cols, (cum,)
 
-    return func
+    return step
 
 
 def online_volume_clock(
@@ -100,14 +70,13 @@ def online_volume_clock(
     One groupBy(symbol) shuffle; state is ONE float per symbol."""
     if bucket_size <= 0:
         raise ValueError(f"bucket_size must be > 0, got {bucket_size}")
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _vc_func(float(bucket_size), state_ttl),
-        outputStructType=VC_OUTPUT_SCHEMA,
-        stateStructType=VC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    return online_operator(
+        ticks,
+        _vc_step(float(bucket_size)),
+        _FRESH,
+        VC_STATE_SCHEMA,
+        fields("price", "size") + _VC_FIELDS,
+        state_ttl,
     )
 
 
@@ -116,24 +85,8 @@ def online_volume_clock_batch(
     bucket_size: float,
     order_cols: tuple[str, ...] = ("ts",),
 ) -> DataFrame:
-    """Batch twin: the identical ``_scan_cum`` from fresh state over
-    each symbol's full in-order history."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(ticks.schema.fields)
-        + [
-            StructField("bucket", LongType()),
-            StructField("cum_volume", DoubleType()),
-        ]
+    """Batch twin of ``online_volume_clock``: adds bucket and
+    cum_volume to the input columns."""
+    return batch_twin(
+        ticks, _vc_step(float(bucket_size)), _FRESH, _VC_FIELDS, order_cols
     )
-    order = list(order_cols)
-    bs = float(bucket_size)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_cum(pdf["size"], 0.0, bs)
-        extra = pd.DataFrame(vals, columns=["bucket", "cum_volume"])
-        return pd.concat([pdf, extra], axis=1)
-
-    return ticks.groupBy("symbol").applyInPandas(run, schema=out_schema)

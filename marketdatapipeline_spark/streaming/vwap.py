@@ -9,31 +9,27 @@ day/week/month VWAP with O(symbols) state, not O(rows). A tick whose
 anchor period differs from the state's resets the sums — the period
 rollover needs no timer, the first tick of the new period triggers it.
 
-Batch parity is BIT-exact on an in-order feed: both paths add the
-same per-row IEEE products left-to-right (Spark's cumulative window
-sum updates incrementally, exactly like the scan here), pinned by
-tests/test_streaming.py. Same in-order-per-symbol contract as
+The stream and ``online_vwap_batch`` run one step (around
+``_scan_vwap``) through the harness in streaming/stateful.py. Parity
+with the window operator is BIT-exact on an in-order feed: both paths
+add the same per-row IEEE products left-to-right (Spark's cumulative
+window sum updates incrementally, exactly like the scan here), pinned
+by tests/test_streaming.py. Same in-order-per-symbol contract as
 online_indicators (stateful.py) — the running sum is order-defined in
 any engine.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.stateful import (
+    batch_twin,
+    fields,
+    online_operator,
+)
 
 __all__ = ["online_vwap", "online_vwap_batch"]
 
@@ -45,18 +41,9 @@ VWAP_STATE_SCHEMA = StructType(
     ]
 )
 
-VWAP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("size", DoubleType()),
-        StructField("vwap", DoubleType()),
-        StructField("vwap_dev", DoubleType()),
-    ]
-)
-
 _FRESH = (-1, 0.0, 0.0)
+
+_VWAP_FIELDS = fields("vwap", "vwap_dev")
 
 
 def _anchor_us(ts: pd.Series, anchor: str) -> pd.Series:
@@ -94,38 +81,25 @@ def _scan_vwap(pdf: pd.DataFrame, st: tuple, anchor: str):
     return vwaps, (a, pv, v)
 
 
-def _vwap_func(anchor: str, state_ttl: str | int | None):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vwaps, st = _scan_vwap(pdf, st, anchor)
-            out = pd.DataFrame(
-                {
-                    "symbol": key[0],
-                    "ts": pdf["ts"].to_numpy(),
-                    "price": pdf["price"].to_numpy(),
-                    "size": pdf["size"].to_numpy(),
-                    # nullable Float64 so zero-volume None reaches Spark
-                    # as NULL (a plain float64 column would coerce it to
-                    # NaN and break the null-convention parity)
-                    "vwap": pd.array(vwaps, dtype="Float64"),
-                }
-            )
-            out["vwap_dev"] = out["price"] - out["vwap"]
-            yield out
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _vwap_step(anchor: str):
+    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)  # validate
 
-    return func
+    def step(pdf: pd.DataFrame, st: tuple):
+        vwaps, st = _scan_vwap(pdf, st, anchor)
+        cols = pd.DataFrame(
+            {
+                "price": pdf["price"],
+                "size": pdf["size"],
+                # nullable Float64 so zero-volume None reaches Spark as
+                # NULL (a plain float64 column would coerce it to NaN
+                # and break the null-convention parity)
+                "vwap": pd.array(vwaps, dtype="Float64"),
+            }
+        )
+        cols["vwap_dev"] = cols["price"] - cols["vwap"]
+        return cols, st
+
+    return step
 
 
 def online_vwap(
@@ -135,37 +109,22 @@ def online_vwap(
 ) -> DataFrame:
     """Continuous anchored VWAP over a stream of per-symbol ticks
     (``symbol, ts, price, size``): one output row per tick carrying
-    the running period VWAP and the price's deviation from it. The
-    groupBy(symbol) is the only shuffle; ``state_ttl`` evicts quiet
-    symbols exactly as in online_indicators."""
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)  # validate
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _vwap_func(anchor, state_ttl),
-        outputStructType=VWAP_OUTPUT_SCHEMA,
-        stateStructType=VWAP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    the running period VWAP and the price's deviation from it.
+    ``state_ttl`` evicts quiet symbols exactly as in
+    online_indicators."""
+    return online_operator(
+        ticks,
+        _vwap_step(anchor),
+        _FRESH,
+        VWAP_STATE_SCHEMA,
+        fields("price", "size") + _VWAP_FIELDS,
+        state_ttl,
     )
 
 
 def online_vwap_batch(ticks: DataFrame, anchor: str = "day") -> DataFrame:
-    """Batch twin: the IDENTICAL scan from fresh state over each
-    symbol's full in-order history via plain ``applyInPandas`` —
-    pytest pins stream == batch-twin AND batch-twin == the window
-    operator (operators/vwap.py), closing the parity triangle."""
-    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)  # validate
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts").reset_index(drop=True)
-        vwaps, _ = _scan_vwap(pdf, _FRESH, anchor)
-        out = pdf[["symbol", "ts", "price", "size"]].copy()
-        # same nullable dtype as the streaming side: None ⇒ NULL
-        out["vwap"] = pd.array(vwaps, dtype="Float64")
-        out["vwap_dev"] = out["price"] - out["vwap"]
-        return out
-
-    return ticks.groupBy("symbol").applyInPandas(
-        run, schema=VWAP_OUTPUT_SCHEMA
-    )
+    """Batch twin of ``online_vwap``: adds vwap and vwap_dev to the
+    input columns. pytest pins stream == batch-twin AND batch-twin ==
+    the window operator (operators/vwap.py), closing the parity
+    triangle."""
+    return batch_twin(ticks, _vwap_step(anchor), _FRESH, _VWAP_FIELDS, ("ts",))

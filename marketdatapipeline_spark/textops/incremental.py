@@ -348,23 +348,16 @@ class LSHDedupStore:
         old_keys = self._snapshot(spark, "keys")
         old_sets = self._snapshot(spark, "sets")
 
-        def best_match(cand: DataFrame, right_sets: DataFrame) -> DataFrame:
-            """cand(new_id, old_id) -> (new_id, dup_of, jaccard), the
-            highest-jaccard (ties: smallest id) verified match."""
+        def verified(cand: DataFrame, right_sets: DataFrame, src: int) -> DataFrame:
+            """cand(new_id, old_id) -> the verified (id_a=new_id,
+            id_b=old_id, jaccard) pairs, tagged ``_src`` (0 store, 1
+            batch)."""
             pairs = cand.select(
                 F.col("new_id").alias("id_a"), F.col("old_id").alias("id_b")
             )
-            scored = _verified_pairs(pairs, tab, right_sets, self.threshold, id_col)
-            w = Window.partitionBy("id_a").orderBy(F.desc("jaccard"), F.col("id_b"))
-            return (
-                scored.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select(
-                    F.col("id_a").alias("new_id"),
-                    F.col("id_b").alias("dup_of"),
-                    "jaccard",
-                )
-            )
+            return _verified_pairs(
+                pairs, tab, right_sets, self.threshold, id_col
+            ).withColumn("_src", F.lit(src))
 
         # vs the store: band-key equi-join, then exact verification
         cand_store = (
@@ -374,7 +367,6 @@ class LSHDedupStore:
             .select(F.col(id_col).alias("new_id"), "old_id")
             .distinct()
         )
-        store_dups = best_match(cand_store, old_sets)
 
         # within the batch: the band-key self-join, keep-min-id — any
         # verified match to a SMALLER batch id drops a doc, whatever that
@@ -384,13 +376,23 @@ class LSHDedupStore:
         cand_batch = _band_pairs(new_keys, id_col, stream="id_b").select(
             F.col("id_a").alias("old_id"), F.col("id_b").alias("new_id")
         )
-        batch_dups = best_match(cand_batch, tab)
 
+        # one pick per new doc over both verified sets: a store match
+        # wins over any batch match (_src first), then the highest
+        # jaccard, ties to the smallest id — planned once, so the store
+        # side is not re-planned for a left_anti against itself
+        w = Window.partitionBy("id_a").orderBy(
+            "_src", F.desc("jaccard"), "id_b"
+        )
         dups = scoped_persist(
-            store_dups.unionByName(
-                batch_dups.join(
-                    store_dups.select("new_id"), "new_id", "left_anti"
-                )
+            verified(cand_store, old_sets, 0)
+            .unionByName(verified(cand_batch, tab, 1))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select(
+                F.col("id_a").alias("new_id"),
+                F.col("id_b").alias("dup_of"),
+                "jaccard",
             )
         )
         verdicts = (

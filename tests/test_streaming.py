@@ -391,31 +391,99 @@ class _FakeState:
         self.timeout = d
 
 
-def test_indicator_handler_timeout_evicts_state():
-    """On a TTL timeout invocation the handler must remove the state
-    and emit nothing; on a normal pass with a TTL it must re-arm the
-    timer after updating state."""
-    from marketdatapipeline_spark.streaming.stateful import _indicator_func
+def _operator_steps():
+    """(name, step, fresh) of every online operator, as its ``online_*``
+    function hands them to the harness."""
+    from marketdatapipeline_spark.streaming import (
+        atr,
+        bollinger,
+        combined,
+        cusum,
+        kama,
+        stateful,
+        volume_clock,
+        vwap,
+    )
 
-    func = _indicator_func(14, 12, 26, 9, state_ttl="30 minutes")
+    return [
+        ("indicators", stateful._indicator_step(14, 12, 26, 9, "price"),
+         stateful._FRESH_STATE),
+        ("atr", atr._atr_step(14), atr._FRESH),
+        ("bollinger", bollinger._boll_step(2, 2.0, "price"), bollinger._FRESH),
+        ("cusum", cusum._cusum_step(0.01, "price"), cusum._FRESH),
+        ("kama", kama._kama_step(1, 2, 30, "price"), kama._FRESH),
+        ("volume_clock", volume_clock._vc_step(100.0), volume_clock._FRESH),
+        ("vwap", vwap._vwap_step("day"), vwap._FRESH),
+        ("ticks", combined._ticks_step("day", 14, 12, 26, 9),
+         stateful._FRESH_STATE + vwap._FRESH),
+    ]
 
-    timed_out = _FakeState(has_timed_out=True, existing=(1,) * 11)
-    out = list(func(("A",), iter([]), timed_out))
-    assert out == [] and timed_out.removed and timed_out.updated is None
 
+@pytest.mark.parametrize("case", _operator_steps(), ids=lambda c: c[0])
+def test_operator_handler_timeout_evicts_state(case):
+    """On a TTL timeout invocation the handler must remove the state,
+    emit nothing and update nothing; on a normal pass with a TTL it
+    must update the state and re-arm the timer."""
     import datetime as dt
+
+    from marketdatapipeline_spark.streaming.stateful import _handler
+
+    _, step, fresh = case
+    func = _handler(step, fresh, ttl_ms=30 * 60_000)
+
+    timed_out = _FakeState(has_timed_out=True, existing=fresh)
+    out = list(func(("A",), iter([]), timed_out))
+    assert out == [] and timed_out.removed
+    assert timed_out.updated is None and timed_out.timeout is None
 
     st = _FakeState()
     pdf = pd.DataFrame(
         {
             "symbol": ["A", "A"],
-            "ts": [dt.datetime(2024, 1, 1, 9, 0), dt.datetime(2024, 1, 1, 9, 1)],
-            "price": [100.0, 101.0],
+            "ts": [dt.datetime(2024, 1, 1, 9, 1), dt.datetime(2024, 1, 1, 9, 0)],
+            "price": [101.0, 100.0],
+            "size": [10.0, 20.0],
         }
     )
-    out = list(func(("A",), iter([pdf]), st))
+    out = list(func(("A",), iter([pdf.iloc[:0], pdf]), st))
     assert len(out) == 1 and len(out[0]) == 2
-    assert st.updated is not None and st.timeout == 30 * 60_000
+    assert list(out[0].columns[:2]) == ["symbol", "ts"]
+    assert out[0]["ts"].is_monotonic_increasing
+    assert not st.removed and st.updated is not None
+    assert len(st.updated) == len(fresh) and st.timeout == 30 * 60_000
+
+
+@pytest.mark.parametrize("ttl", [0, "0 minutes", "-1 hour"])
+def test_online_operators_reject_non_positive_ttl(spark, tick_dir, ttl):
+    """A non-positive TTL is refused when the operator is called, before
+    any query starts: pyspark's setTimeoutDuration would only raise
+    inside the running query, and ``state_ttl=0`` used to pick
+    NoTimeout and then still arm a timer."""
+    from marketdatapipeline_spark.streaming import (
+        online_atr,
+        online_bollinger,
+        online_cusum,
+        online_kama,
+        online_ticks,
+        online_volume_clock,
+        online_vwap,
+    )
+
+    ticks = read_tick_stream(spark, tick_dir)
+    operators = [
+        online_indicators,
+        online_atr,
+        online_bollinger,
+        lambda t, state_ttl: online_cusum(t, 0.01, state_ttl=state_ttl),
+        online_kama,
+        lambda t, state_ttl: online_volume_clock(t, 100.0, state_ttl=state_ttl),
+        online_vwap,
+        online_ticks,
+    ]
+    for op in operators:
+        with pytest.raises(ValueError, match="positive"):
+            op(ticks, state_ttl=ttl)
+    assert not spark.streams.active
 
 
 def test_online_indicators_with_ttl_matches_no_ttl_on_live_feed(spark, bars_pdf, tmp_path):
